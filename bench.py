@@ -395,9 +395,10 @@ def main() -> None:
                 print(f"# bench detail not written: {ex}", file=sys.stderr)
     # headline fields LAST: the driver keeps the tail of the output, so a
     # front-truncated line must still carry metric/value/sf (BENCH_r03 lost
-    # its total to the old field order) — plus a short all-totals line after,
-    # which survives any truncation whole.
+    # its total to the old field order) — then the compact per-query map,
+    # and last the short contract line, which survives any truncation whole.
     print(json.dumps(payload))
+    print(json.dumps({"q": timings}, separators=(",", ":")))
     print(
         json.dumps(
             {

@@ -327,8 +327,6 @@ def attach_blooms(
     # for the new column would then treat the tip as spec-free, skip its
     # files on an agg miss, and silently drop matching rows (false
     # negatives, the one failure class blooms must never have)
-    import json as _json
-
     raw = U._read_manifest_raw(table_dir, cur)
     if raw is None:
         raise FileNotFoundError(f"{cur} has no manifest")
@@ -362,10 +360,7 @@ def attach_blooms(
         # the fast path bails conservatively on this manifest
         raw.pop(_AGG_FIELD, None)
         raw.pop(_SPEC_COLS_FIELD, None)
-    fsio.write_bytes(
-        fsio.join(table_dir, cur, U._MANIFEST),
-        _json.dumps(raw, separators=(",", ":")).encode(),
-    )
+    U._write_manifest_raw(fsio.join(table_dir, cur), raw)
     return sum(len(per_col) for per_col in specs.values())
 
 
@@ -852,9 +847,7 @@ def read_table_points(
     # logical probe column PER ENTRY (column-mapping appends: files from
     # different rename epochs carry different physical names)
     log = U.rename_log_of(manifest)
-    rel_all, full_all = U._entries_and_paths(
-        table_dir, v, manifest if manifest.get("files") else None
-    )
+    rel_all, full_all = U._entries_and_paths(table_dir, manifest)
     cand = []  # (index into rel_all, spec) for entries with a usable bloom
     for i, e in enumerate(rel_all):
         owner = "" if U._is_abs_entry(e) else e.split("/", 1)[0]

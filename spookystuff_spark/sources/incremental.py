@@ -143,7 +143,7 @@ def _fold_support(
     and the join view's ``refresh_join_distinct``. NULL-SAFE full-outer
     merge: a NULL value is an ordinary support row (read-time COUNT
     excludes it, SQL-style) and a NULL-keyed group must not split
-    (``refresh_aggregate``'s r8 review catch, same class here)."""
+    (the same class as ``refresh_aggregate``'s NULL-safe merge)."""
     if current is None:
         merged = delta.select(*fold_key, F.col("_dn").alias("_n"))
     else:
@@ -192,7 +192,7 @@ def _resolve_buckets(
     aggregate table: the manifest's recorded layout wins (the parameter
     then only cross-checks — a mismatched bucket count or group-column
     list raises, re-bucketing is a rebuild, never a silent drift);
-    otherwise the caller's ``dst_buckets`` opts a new/legacy table in."""
+    otherwise the caller's ``dst_buckets`` opts an unbucketed table in."""
     rec_buckets, rec_gcols = agg_layout(dst_dir)
     if rec_buckets is not None:
         if dst_buckets is not None and int(dst_buckets) != int(rec_buckets):
@@ -495,10 +495,9 @@ def rebucket(spark: SparkSession, dst_dir: str, n_buckets: int) -> str | None:
 def advance_watermark(dst_dir: str, marker: str) -> str:
     """O(1) watermark-only commit: feed-less source versions (compactions,
     maintenance) advance the ``_SRC_``-family marker with an EMPTY manifest
-    delta — no data files written, never a table rewrite (pre-r9 the
-    aggregate refresh rewrote the whole derived table to record a no-op).
-    Deletion vectors, schema maps and snapshot-scoped extras carry exactly
-    like a metadata-only append."""
+    delta — no data files written, never a table rewrite. Deletion
+    vectors, schema maps and snapshot-scoped extras carry exactly like a
+    metadata-only append."""
     from spookystuff_spark import fsio
 
     cur = U._latest(dst_dir)
@@ -508,7 +507,7 @@ def advance_watermark(dst_dir: str, marker: str) -> str:
         extra.update({"dv": raw["dv"], "dv_keys": raw["dv_keys"]})
     v = U._next_version(dst_dir)
     fsio.mkdirs(fsio.join(dst_dir, v))
-    extra.update(U._schema_map_fields(raw, v))
+    extra.update(U._schema_map_fields(raw))
     # NOT carrying "markers": the advance's own marker must be the tip
     # version's newest — a carried older _SRC_ entry would precede it in
     # the manifest index and newest_marker would answer stale
@@ -534,12 +533,11 @@ def insert_only_runs(
     commits — pure insert feeds by the writer's contract — batch into ONE
     fold, so a source that committed K crawl batches between refreshes
     pays one signature/tokenize pass and one index commit instead of K
-    Spark jobs (the r9 verdict's per-version replay cost). Every other
-    kind (upsert, delete, rename, drop, restore, compact, ...) stays a
-    single-version run, keeping the per-version soundness checks and the
-    delete/mixed crash healing exactly as before. Kind comes from the
-    RAW manifest via the replay's shared ``meta_cache`` memo — zero
-    extra metadata reads."""
+    Spark jobs. Every other kind (upsert, delete, rename, drop, restore,
+    compact, ...) stays a single-version run, keeping the per-version
+    soundness checks and the delete/mixed crash healing exactly as before.
+    Kind comes from the RAW manifest via the replay's shared
+    ``meta_cache`` memo — zero extra metadata reads."""
     raws = meta_cache.setdefault("raws", {})
     runs: list[list[str]] = []
     cur: list[str] = []
@@ -585,8 +583,7 @@ def newest_marker(dst_dir: str, prefix: str) -> str | None:
     marker on or near the tip (the refresh steady state, since every
     refresh stamps its commit and maintenance carries the index) costs
     one or two raw-manifest reads, never an O(history) chain
-    materialization or a directory listing per version; only pre-index
-    manifests fall back to listing (``upsert.version_markers``)."""
+    materialization or a directory listing per version."""
     try:
         for v, raw in U.chain_desc(dst_dir):
             for name in U.version_markers(dst_dir, v, raw=raw):
@@ -632,7 +629,7 @@ def _changes_since(
     consumer folds: group/sum columns, the vector column, the text
     column); dropping anything else just stops appearing in newer feeds.
     With ``requested_cols=None`` (consumption unknown) every drop refuses,
-    the conservative pre-r8 behavior — a consumer folding the dropped
+    the conservative behavior — a consumer folding the dropped
     column would silently treat post-drop feeds as null contributions.
 
     ``meta_cache``: an empty dict a PER-VERSION replay loop (the index
@@ -689,14 +686,7 @@ def _changes_since(
     for v in past_after:
         m = raws[v]
         if m.get("kind") == "rename":
-            log = m.get("rename_log") or []
-            if not log:
-                raise ValueError(
-                    f"{src_dir}/{v}: rename commit without an event log "
-                    "(pre-r7 writer) inside the fold range — rebuild "
-                    "derived views/indexes from the new schema"
-                )
-            events.append(log[-1])
+            events.append(m["rename_log"][-1])
     for v in in_range:
         newest = v
         m = raws[v]
@@ -750,19 +740,14 @@ def _changes_since(
             if U._vnum(ev["v"]) > U._vnum(v) and ev["old"] in df.columns:
                 df = df.withColumnRenamed(ev["old"], ev["new"])
         if v != first:
-            # kinds from metadata where possible — a reference feed's
-            # column is the literal we just filled, and sidecar-bearing
-            # feeds record their writer's exact kind set — so the
-            # soundness check costs zero Spark jobs per version; only a
-            # pre-sidecar feed still derives kinds by scanning its rows
-            if filled_kind is not None:
-                kinds = {filled_kind}
-            else:
-                kinds = U.feed_kinds(src_dir, v)
-            if kinds is None:
-                kinds = {
-                    r[0] for r in df.select("_change").distinct().collect()
-                }
+            # kinds from metadata — a reference feed's column is the
+            # literal we just filled, and row feeds record their writer's
+            # exact kind set — so the soundness check costs zero Spark jobs
+            kinds = (
+                {filled_kind}
+                if filled_kind is not None
+                else U.feed_kinds(src_dir, v)
+            )
             unknown = kinds - set(_POS) - set(_NEG)
             if unknown:
                 raise ValueError(
@@ -989,8 +974,7 @@ def refresh_aggregate(
             # NULL-SAFE key match: a full-outer equi-join never matches
             # NULL = NULL, so a NULL-keyed group's delta would miss its
             # current row, split into two rows, and the n_rows filter would
-            # silently drop the retraction half — permanent drift (the r8
-            # review's join-aggregate catch, same class here)
+            # silently drop the retraction half — permanent drift
             joined = current.join(
                 d, _null_safe_key_cond(current, d, gcols), "full_outer"
             )

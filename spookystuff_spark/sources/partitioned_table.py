@@ -258,7 +258,7 @@ def append_partitioned(
         # rows resurrect (the append_rows contract, upsert.py:549-556)
         carried = {"dv": raw["dv"], "dv_keys": raw["dv_keys"]}
     if raw is not None:
-        carried.update(U._schema_map_fields(raw, v))
+        carried.update(U._schema_map_fields(raw))
     extra = {"partition_col": partition_col, **carried}
     extra.update(_stats_fields(table_dir, own, stats_cols) or {})
     extra.update(
@@ -429,31 +429,30 @@ def upsert_partitioned(
         # written footers driver-side — the old ``limit(1).count()`` probe
         # paid a second evaluation of the anti-join per merge (§1.2). An
         # all-upserted vector leaves only empty part files; the fields are
-        # then dropped and the debris dir stays hidden (underscore path).
-        remaining.write.mode("errorifexists").parquet(
-            fsio.join(table_dir, v, "_dv")
-        )
-        dv_names = U._parquet_names(fsio.join(table_dir, v, "_dv"))
+        # then dropped and the dir deleted.
+        dv_dir = fsio.join(table_dir, v, "_dv")
+        remaining.write.mode("errorifexists").parquet(dv_dir)
+        dv_names = U._parquet_names(dv_dir)
         import pyarrow.parquet as _pq
 
-        n_remaining = sum(
-            _pq.ParquetFile(
-                fsio.join(table_dir, v, "_dv", n)
-            ).metadata.num_rows
-            for n in dv_names
-        )
+        n_remaining = 0
+        for n in dv_names:
+            with fsio.open_input(fsio.join(dv_dir, n)) as f:
+                n_remaining += _pq.ParquetFile(f).metadata.num_rows
         if n_remaining:
             dv_fields = {
                 "dv": [f"{v}/_dv/{n}" for n in dv_names],
                 "dv_keys": list(key_cols),
             }
+        else:
+            fsio.delete_dir(dv_dir)
     own = _own_entries_recursive(table_dir, v)
     touched_entries = [e for e in rel_entries if _part_of(e) in touched]
     extra = {"partition_col": partition_col, **(dv_fields or {})}
     if manifest:
         # untouched entries still carry old physical names — the schema
         # maps (and the per-entry rename_log) travel with the commit
-        extra.update(U._schema_map_fields(manifest, v))
+        extra.update(U._schema_map_fields(manifest))
     extra.update(_stats_fields(table_dir, own, stats_cols) or {})
     # delta commit: remove the touched partitions' old entries, add the
     # rewritten slice — O(touched) manifest bytes, untouched partitions
@@ -513,9 +512,7 @@ def read_table_partitions(
         ]
     else:
         manifest = U.read_manifest(table_dir, v) or {"files": []}
-        rel_all, full_all = U._entries_and_paths(
-            table_dir, v, manifest if manifest.get("files") else None
-        )
+        rel_all, full_all = U._entries_and_paths(table_dir, manifest)
         keep = [
             (r, f) for r, f in zip(rel_all, full_all) if _part_of(r) in wanted
         ]
@@ -690,9 +687,7 @@ def read_table_partitions_pruned(
     manifest = U.read_manifest(table_dir, v) or {"files": []}
     log = U.rename_log_of(manifest)
     stats = U.entry_stats(table_dir, v)
-    rel_all, full_all = U._entries_and_paths(
-        table_dir, v, manifest if manifest.get("files") else None
-    )
+    rel_all, full_all = U._entries_and_paths(table_dir, manifest)
     keep_rel, keep_full, skipped_part, skipped_stats = [], [], 0, 0
     for e, full in zip(rel_all, full_all):
         if _part_of(e) not in wanted:

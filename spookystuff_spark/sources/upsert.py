@@ -2,47 +2,49 @@
 
 Plain parquet directories can't be updated in place; the standard fix
 (Delta/Iceberg's core idea) is versioned immutable snapshots + an atomic
-pointer swap. This is that protocol, minimal and dependency-free:
+commit. This module implements ONE on-disk format:
 
     <dir>/v00001/part-*.parquet     immutable data files
-    <dir>/v00001/_MANIFEST.json     THE commit record: the snapshot's data
+    <dir>/v00001/_MANIFEST.json     THE snapshot record: format stamp, data
                                     files (possibly living in EARLIER version
-                                    dirs), schema, kind, PARENT version,
-                                    commit timestamp, optional per-file
-                                    stats and deletion vectors
+                                    dirs) or an entry delta against a base,
+                                    schema, kind, PARENT version, commit
+                                    timestamp, marker index, optional
+                                    per-file stats and deletion vectors
     <dir>/v00002/_dv/*.parquet      deletion vectors (deleted-row keys)
-    <dir>/_LATEST                   one line: the current version name
+    <dir>/v00002/_changes/          the version's change feed
+    <dir>/_commits/<parent>.c       THE commit: created exclusively, content
+                                    = the committed child version
+    <dir>/_LATEST                   two lines: tip version, its parent slot
 
-COMMITTED HISTORY IS THE MANIFEST PARENT CHAIN walked back from the
-pointer (the commit-log rule, as in Delta): a dir outside the chain —
-torn data, a Spark ``_SUCCESS``, even a complete manifest whose pointer
-swap never happened — is vacuumable debris, never readable state. Appends
-and clones are metadata-only: the new manifest lists the previous
-snapshot's immutable files plus the new batch's — no hard links, no
-copies — which is what makes the protocol object-store-safe (S3/HDFS/GCS
-have no ``os.link``; the reference's cache likewise goes through Hadoop
-``FileSystem``, module/core/.../caching/DFSDocCache.scala:13-46). All IO is
-routed through :mod:`spookystuff_spark.fsio` (pyarrow.fs), never ``os.path``.
+A writer materializes the next snapshot's data files (Spark write), writes
+the manifest (chain link = the parent it READ from), then commits by
+creating ``_commits/<parent>.c`` create-exclusive — every writer extending
+the same parent races for the same object, so exactly one child of any
+parent exists and a loser gets :class:`ConcurrentWriteError` instead of
+erasing the winner's rows. ``_LATEST`` is a VERIFIED cache of the tip: it
+counts only when the named parent slot holds exactly that version, and
+committed child slots are walked forward from it; anything unverifiable
+falls back to listing ``_commits``. Committed history is the manifest
+parent chain walked back from the tip — a dir outside it (torn data, a
+manifest whose commit never happened) is vacuumable debris, never
+readable state.
 
-A writer materializes the next snapshot's data files (Spark write), records
-the manifest (chain link = the parent it READ from; a moved pointer at
-commit time raises :class:`ConcurrentWriteError` instead of losing the
-interleaved writer's rows), then atomically replaces ``_LATEST``. Readers
-resolve the pointer, load the manifest, read an immutable file list, and
-apply any accumulated deletion vectors (``delete_where_dv`` — O(deleted)
-merge-on-read deletes) — never a half-written directory. Crash mid-write
-leaves debris ``vacuum`` reclaims (reference-aware: files or vectors a
-kept manifest still names survive).
+Every manifest is written by :func:`_write_manifest_raw`, which stamps
+:data:`FORMAT_VERSION`; every read refuses a manifest whose stamp is
+missing or different. Appends and clones are metadata-only: the new
+manifest references the previous snapshot's immutable files — no hard
+links, no copies — which is what makes the protocol object-store-safe
+(the reference's cache likewise goes through Hadoop ``FileSystem``,
+module/core/.../caching/DFSDocCache.scala:13-46). All IO is routed
+through :mod:`spookystuff_spark.fsio` (pyarrow.fs), never ``os.path``.
 
 Extras over the core protocol: ``history()``/``version_at`` (DESCRIBE
 HISTORY + TIMESTAMP AS OF), ``attach_stats``/``read_table_pruned``
 (stats-in-manifest file pruning with zero footer IO at plan time),
-``compact(zorder_by=...)`` (OPTIMIZE ZORDER), and the partition-aware
-O(touched) MERGE in sources/partitioned_table.py.
-
-Single-writer optimistic semantics (reference scope: the doc cache's
-compaction story in sources/doc_cache_source.py, generalized to any keyed
-table); the OCC check closes all but a tiny pre-swap window.
+``compact(zorder_by=...)`` (OPTIMIZE ZORDER), merge-on-read deletion
+vectors, and the partition-aware O(touched) MERGE in
+sources/partitioned_table.py.
 """
 
 from __future__ import annotations
@@ -61,6 +63,13 @@ _COMMITS = "_commits"
 _KIND = "_kind"
 _PREIMAGED = "_PREIMAGED"  # feed sidecar: update preimages were logged
 _FEED_KINDS = "_KINDS"  # feed sidecar: JSON list of the _change kinds present
+
+#: The on-disk table format every manifest is stamped with
+#: (:func:`_write_manifest_raw`) and every read requires
+#: (:func:`_load_manifest`). Tables never outlive the format: there is no
+#: reader for any other version.
+FORMAT_VERSION = 1
+_FORMAT_KEY = "format"
 
 _UNCHECKED = object()  # sentinel: commit without a conflict check
 
@@ -93,18 +102,12 @@ def _commit_file_name(parent: str | None) -> str:
 
 
 def _commit_names(table_dir: str) -> list[str]:
-    """Commit-file names, both formats: parent-keyed ``vNNNNN.c`` (current)
-    and legacy per-version ``vNNNNN`` (pre-r7 tables). The newest is the
-    NUMERIC max (see :func:`_vnum` — lexical breaks at the
-    v99999→v100000 width transition), with ``<vN>.c`` outranking a legacy
-    ``vN`` of the same number (it proves a child of N committed)."""
-    out = []
-    for n in fsio.ls(fsio.join(table_dir, _COMMITS)):
-        if not n.startswith("v"):
-            continue
-        if n[1:].isdigit() or (n.endswith(".c") and n[1:-2].isdigit()):
-            out.append(n)
-    return out
+    """Commit-file names ``vNNNNN.c`` under ``_commits``."""
+    return [
+        n
+        for n in fsio.ls(fsio.join(table_dir, _COMMITS))
+        if n.startswith("v") and n.endswith(".c") and n[1:-2].isdigit()
+    ]
 
 
 def _vnum(name: str) -> int:
@@ -117,32 +120,16 @@ def _vnum(name: str) -> int:
 
 
 def _latest_from_listing(table_dir: str) -> str | None:
-    """Authoritative tip: list ``_commits`` and take the newest entry (the
+    """Authoritative tip: list ``_commits`` and read the newest slot (the
     Delta-log rule — a commit IS the ``_commits`` entry, created
-    exclusively). A parent-keyed ``<P>.c`` entry holds the committed
-    version as content; a legacy ``vNNNNN`` entry IS the version. Falls
-    back to the ``_LATEST`` pointer for tables written before the commit
-    dir existed. O(total commits) — the slow path behind
+    exclusively, holding the committed version as content). None when
+    nothing ever committed. O(total commits) — the slow path behind
     :func:`_latest`'s verified-pointer fast path."""
     names = _commit_names(table_dir)
-    if names:
-        # numeric order (see _vnum); a parent-keyed <vN>.c outranks a
-        # legacy vN of the same number (it proves a CHILD of N committed)
-        top = max(names, key=lambda n: (_vnum(n), n.endswith(".c")))
-        if top.endswith(".c"):
-            v = (
-                fsio.read_bytes(fsio.join(table_dir, _COMMITS, top))
-                .decode()
-                .strip()
-            )
-            return v or None
-        return top
-    p = fsio.join(table_dir, _POINTER)
-    if not fsio.exists(p):
+    if not names:
         return None
-    # first line only: a two-line verified pointer on a table whose
-    # _commits dir was damaged still names the version on line one
-    v = fsio.read_bytes(p).decode().partition("\n")[0].strip()
+    top = max(names, key=_vnum)  # numeric order, see _vnum
+    v = fsio.read_bytes(fsio.join(table_dir, _COMMITS, top)).decode().strip()
     return v or None
 
 
@@ -162,27 +149,9 @@ def _latest(table_dir: str) -> str | None:
     child, so follow its content — O(versions behind), normally one
     existence check that finds nothing.
 
-    Anything unverifiable — pointer missing, single-line legacy format,
-    torn write, slot-content mismatch, non-monotone walk — falls back to
-    the authoritative listing (:func:`_latest_from_listing`), which also
-    serves pre-commit-dir legacy tables exactly as before.
-
-    MIXED-DEPLOYMENT guard: a pre-r7 writer commits by creating a LEGACY
-    ``_commits/<version>`` entry and may die before rewriting the pointer
-    — invisible to the child-slot walk (different object name). The walk
-    therefore also probes forward for legacy entries, guided by version
-    DIRS (a committed version always has its dir, and writers name
-    versions contiguously above whatever dirs they saw) — one extra
-    existence check in the steady state. RESIDUAL CORNER, accepted and
-    bounded: a legacy commit separated from the tip by a dir gap WIDER
-    THAN ONE that a pre-r9 vacuum opened stays invisible to this walk and
-    to :func:`_next_version`'s lookahead (sound detection of an arbitrary
-    gap needs the O(commits) listing these fast paths exist to avoid) —
-    until ANY listing-based resolution runs: :func:`vacuum` (which always
-    resolves from the authoritative listing, preserves the legacy tip,
-    and heals the pointer), an unverifiable pointer, or a lost commit
-    race. Mixed deployments upgrading past r9 should run one vacuum (or
-    any maintenance) to clear pre-existing gaps."""
+    Anything unverifiable — pointer missing, torn write, slot-content
+    mismatch, non-monotone walk — falls back to the authoritative listing
+    (:func:`_latest_from_listing`)."""
     p = fsio.join(table_dir, _POINTER)
     try:
         lines = fsio.read_bytes(p).decode().splitlines()
@@ -205,57 +174,17 @@ def _latest(table_dir: str) -> str | None:
         return _latest_from_listing(table_dir)
     while True:
         child = fsio.join(table_dir, _COMMITS, _commit_file_name(v))
-        if fsio.exists(child):
-            try:
-                nxt = fsio.read_bytes(child).decode().strip()
-            except (FileNotFoundError, OSError):  # raced a vacuum
-                return _latest_from_listing(table_dir)
-            if not (
-                nxt.startswith("v")
-                and nxt[1:].isdigit()
-                and _vnum(nxt) > _vnum(v)
-            ):
-                return _latest_from_listing(table_dir)
-            v = nxt
-            continue
-        # no parent-keyed child: probe for a LEGACY-format child before
-        # trusting the tip (see the mixed-deployment guard above). Walk
-        # candidate numbers while their version dirs exist; a legacy
-        # commit entry among them is a committed child — step to it.
-        n, stepped = _vnum(v), False
-        while True:
-            n += 1
-            name = f"v{n:05d}"
-            # dir first: a committed version always has its dir (the
-            # manifest lives in it), so a missing dir ends the candidate
-            # range — ONE existence check in the steady state
-            if not fsio.exists(fsio.join(table_dir, name)):
-                break
-            if fsio.exists(fsio.join(table_dir, _COMMITS, name)):
-                v, stepped = name, True
-                break
-        if not stepped:
+        if not fsio.exists(child):
             return v
-
-
-_POINTER_UNVERIFIED = object()  # _swap_pointer: write the single-line form
-
-
-def _swap_pointer(
-    table_dir: str, version: str, parent=_POINTER_UNVERIFIED
-) -> None:
-    """Refresh the ``_LATEST`` pointer cache. With ``parent`` (the version
-    this commit extended — what :func:`_finalize_commit` passes), writes
-    the two-line verifiable form ``version\\n<parent slot>`` that
-    :func:`_latest` can trust after one slot read. Without it (operator
-    repoints, tests), writes the legacy single-line form, which
-    :func:`_latest` treats as unverifiable and resolves via the listing —
-    a hand-repointed table is always re-checked, never blindly served."""
-    if parent is _POINTER_UNVERIFIED:
-        payload = version.encode()
-    else:
-        payload = f"{version}\n{_commit_file_name(parent)}".encode()
-    fsio.write_bytes(fsio.join(table_dir, _POINTER), payload)
+        try:
+            nxt = fsio.read_bytes(child).decode().strip()
+        except (FileNotFoundError, OSError):  # raced a vacuum
+            return _latest_from_listing(table_dir)
+        if not (
+            nxt.startswith("v") and nxt[1:].isdigit() and _vnum(nxt) > _vnum(v)
+        ):
+            return _latest_from_listing(table_dir)
+        v = nxt
 
 
 def _finalize_commit(
@@ -272,12 +201,10 @@ def _finalize_commit(
     the lower name — races to create the same file, and the filesystem
     guarantees exactly one child of any parent ever exists. No sibling
     scan, no retraction, no window in which two writers can both report
-    success (the r6 protocol scanned higher-named siblings post-CAS, which
-    missed the interleaving where the lower-named writer completes its
-    scan before the higher one creates its commit file — a lost update).
-    The expected-parent re-check stays as a cheap fast-fail for writers
-    whose table moved underneath them. The legacy pointer is then
-    refreshed as a cache."""
+    success. The expected-parent re-check stays as a cheap fast-fail for
+    writers whose table moved underneath them. The ``_LATEST`` pointer is
+    then refreshed as a cache: ``version\\n<parent slot>``, the form
+    :func:`_latest` verifies with one slot read."""
     now = _latest(table_dir)
     if now != parent:
         raise ConcurrentWriteError(
@@ -295,7 +222,10 @@ def _finalize_commit(
             f"{table_dir}: parent {parent!r} already has a committed child "
             "— retry against the new state"
         ) from None
-    _swap_pointer(table_dir, version, parent)
+    fsio.write_bytes(
+        fsio.join(table_dir, _POINTER),
+        f"{version}\n{_commit_file_name(parent)}".encode(),
+    )
 
 
 def retry_on_conflict(
@@ -353,75 +283,35 @@ def _next_version(table_dir: str) -> str:
     successor until a free slot — a crashed writer's dangling dir at
     pointer+1 costs one extra existence check, not a full listing. Names
     stay strictly increasing along the commit chain (which the pointer
-    walk in :func:`_latest` relies on); a gap below higher-numbered
-    debris may be reused, which is safe because commit order is the
-    manifest parent chain, never the numbering, and the create-exclusive
-    data dir still arbitrates racing writers."""
+    walk in :func:`_latest` relies on); commit order is the parent-keyed
+    CAS, never the numbering, and the create-exclusive data dir still
+    arbitrates racing writers."""
     cur = _latest(table_dir)
-    n = int(cur[1:]) if cur else 0
+    n = _vnum(cur) if cur else 0
     while True:
         n += 1
         name = f"v{n:05d}"
         if not fsio.exists(fsio.join(table_dir, name)):
-            # one-step lookahead before taking a free slot: a committed
-            # LEGACY version may sit just above it (a pre-r9 vacuum
-            # removed the debris dir between) — committing below it would
-            # fork. Wider gaps remain the documented residual corner (a
-            # vacuum or any listing-based resolution heals them); sound
-            # detection of an arbitrary gap needs the listing this write
-            # path exists to avoid.
-            nxt = f"v{n + 1:05d}"
-            if fsio.exists(fsio.join(table_dir, nxt)) and fsio.exists(
-                fsio.join(table_dir, _COMMITS, nxt)
-            ):
-                auth = _latest_from_listing(table_dir)
-                if auth is not None and (
-                    cur is None or _vnum(auth) > _vnum(cur)
-                ):
-                    _swap_pointer(table_dir, auth)
-                    raise ConcurrentWriteError(
-                        f"{table_dir}: committed version {nxt} found "
-                        f"ahead of the pointer ({cur}) — a legacy-format "
-                        "writer committed concurrently; retry against "
-                        "the new state"
-                    )
             return name
-        # occupied slot: usually crashed-writer debris — but on a mixed
-        # deployment it may be a LEGACY-format writer's COMMITTED version
-        # the verified-pointer walk couldn't see past a dir gap.
-        # Committing "past" it would fork history and silently orphan the
-        # legacy commit: heal the pointer to the unverifiable single-line
-        # form (every resolver then uses the authoritative listing until
-        # the next commit re-verifies it) and make the caller retry.
-        if fsio.exists(fsio.join(table_dir, _COMMITS, name)):
-            auth = _latest_from_listing(table_dir)
-            if auth is not None and (cur is None or _vnum(auth) > _vnum(cur)):
-                _swap_pointer(table_dir, auth)
-                raise ConcurrentWriteError(
-                    f"{table_dir}: committed version {name} found ahead "
-                    f"of the pointer ({cur}) — a legacy-format writer "
-                    "committed concurrently; retry against the new state"
-                )
 
 
 # --------------------------------------------------------------- manifest
 
 
 #: Full manifests with more entries than this spill the file list to a
-#: compressed sidecar (``files_ref``) instead of inline JSON — at 1M files
-#: an inline checkpoint is ~100 MB of JSON parsed on every fold, while the
-#: zlib sidecar is a few MB decoded only by consumers that actually need
-#: the list (raw top-level fields stay readable without it).
+#: parquet entry-table sidecar (``entries_ref``) instead of inline JSON —
+#: at 1M files an inline checkpoint is ~100 MB of JSON parsed on every
+#: fold, while the sidecar is a few MB read only by consumers that
+#: actually need the list (raw top-level fields stay readable without it).
 CHECKPOINT_INLINE_MAX = 1000
 
-_FILES_REF = "files_ref"  # legacy (r8) zlib file-list sidecar — read-only
 _FILES_COUNT = "files_count"
-_FILES_SIDECAR = "_FILES.z"
-_ENTRIES_REF = "entries_ref"  # parquet ENTRY TABLE sidecar (r9+)
+_ENTRIES_REF = "entries_ref"  # parquet ENTRY TABLE sidecar
 #: NOT underscore-prefixed (Spark's hidden-file convention would make it
 #: invisible to the DataFrame read that distributed planning depends on)
-#: and NOT ``.parquet``-suffixed (legacy dir-listing fallbacks glob
-#: ``*.parquet`` as data) — explicit-path readers don't care about either.
+#: and NOT ``.parquet``-suffixed (writers enumerate their own data files
+#: by globbing ``*.parquet`` in the version dir) — explicit-path readers
+#: don't care about either.
 _ENTRIES_SIDECAR = "ENTRIES.pq"
 
 #: Per-entry field columns the parquet entry table carries alongside the
@@ -443,7 +333,7 @@ def _entry_part(entry: str) -> str | None:
 def _is_full_manifest(raw: dict) -> bool:
     """Full (checkpoint) manifest — file list inline or in a sidecar — as
     opposed to a delta manifest (``files_base``/``files_add``/...)."""
-    return "files" in raw or _FILES_REF in raw or _ENTRIES_REF in raw
+    return "files" in raw or _ENTRIES_REF in raw
 
 
 def _read_entries_table(table_dir: str, ref: str):
@@ -456,20 +346,13 @@ def _read_entries_table(table_dir: str, ref: str):
 
 
 def _full_files(table_dir: str, raw: dict) -> list[str]:
-    """Materialized file list of a FULL manifest: inline ``files``, the
-    parquet entry table (r9), or the legacy zlib ``files_ref`` sidecar."""
+    """Materialized file list of a FULL manifest: inline ``files`` or the
+    parquet entry table."""
     if "files" in raw:
         return list(raw["files"])
-    if _ENTRIES_REF in raw:
-        return _read_entries_table(table_dir, raw[_ENTRIES_REF])[
-            "entry"
-        ].to_pylist()
-    import zlib
-
-    data = zlib.decompress(
-        fsio.read_bytes(fsio.join(table_dir, raw[_FILES_REF]))
-    )
-    return data.decode().split("\n") if data else []
+    return _read_entries_table(table_dir, raw[_ENTRIES_REF])[
+        "entry"
+    ].to_pylist()
 
 
 def _files_fields(
@@ -533,8 +416,8 @@ def write_manifest(
     """Record the snapshot's commit manifest: relative (to ``table_dir``)
     or absolute data-file paths, the Spark schema (StructType.json()), the
     commit kind, and the PARENT version this snapshot was derived from.
-    The manifest + pointer swap define the commit: committed history is
-    the parent chain walked back from ``_LATEST``, so a crashed writer's
+    The manifest + commit file define the commit: committed history is
+    the parent chain walked back from the tip, so a crashed writer's
     dir — even one that got as far as its manifest, or that carries
     Spark's ``_SUCCESS`` — is unreachable debris, never readable state.
     Above :data:`CHECKPOINT_INLINE_MAX` entries the file list (and any
@@ -560,59 +443,62 @@ def write_manifest(
         "kind": kind,
         "parent": parent,
         "ts_ms": int(time.time() * 1000),
-        # authoritative marker index — [] means "this commit carries no
-        # markers", key ABSENT means a pre-index manifest (readers fall
-        # back to listing the version dir). Marker-bearing commits fill
-        # it via _stamp_marker; content-preserving commits carry it in
-        # extra_fields (below) so watermarks survive maintenance.
+        # the marker index — [] means "this commit carries no markers".
+        # Marker-bearing commits fill it via _stamp_marker;
+        # content-preserving commits carry it in extra_fields (below) so
+        # watermarks survive maintenance.
         "markers": [],
     }
     if extra_fields:
         payload.update(extra_fields)
+    _write_manifest_raw(fsio.join(table_dir, version), payload)
+
+
+def _write_manifest_raw(manifest_dir: str, raw: dict) -> None:
+    """THE manifest writer: every ``_MANIFEST.json`` — table, view, index
+    and change-feed manifests, full or delta, fresh or rewritten in place
+    — is published here, stamped with :data:`FORMAT_VERSION`."""
     fsio.write_bytes(
-        fsio.join(table_dir, version, _MANIFEST),
-        json.dumps(payload, separators=(",", ":")).encode(),
+        fsio.join(manifest_dir, _MANIFEST),
+        json.dumps(
+            {**raw, _FORMAT_KEY: FORMAT_VERSION}, separators=(",", ":")
+        ).encode(),
     )
+
+
+def _load_manifest(path: str) -> dict:
+    """Parse a ``_MANIFEST.json``, refusing any manifest whose format
+    stamp is missing or different."""
+    raw = json.loads(fsio.read_bytes(path))
+    if raw.get(_FORMAT_KEY) != FORMAT_VERSION:
+        raise ValueError(
+            f"{path}: table format {raw.get(_FORMAT_KEY)!r} is not "
+            f"{FORMAT_VERSION}, the only format this reader reads — "
+            "rebuild the table"
+        )
+    return raw
 
 
 def _stamp_marker(table_dir: str, version: str, marker: str) -> None:
-    """Record a commit marker (stream batch / IVM watermark) BOTH ways:
-    the marker file in the version dir (pre-r8 readers, human debugging)
-    and the ``markers`` list in the version's raw manifest — the index
-    :func:`version_markers` reads, so watermark lookups cost one manifest
-    read instead of one directory listing per walked version. Runs before
-    the commit file, so marker and snapshot stay atomic together."""
-    fsio.touch(fsio.join(table_dir, version, marker))
+    """Record a commit marker (stream batch / IVM watermark) in the
+    ``markers`` index of the version's raw manifest, so watermark lookups
+    cost one manifest read per walked version. Runs before the commit
+    file, so marker and snapshot stay atomic together."""
     raw = _read_manifest_raw(table_dir, version)
-    if raw is None:  # no manifest yet (legacy-shaped writer): file only
-        return
-    names = list(raw.get("markers") or ())
-    if marker not in names:
-        names.append(marker)
-    raw["markers"] = names
-    fsio.write_bytes(
-        fsio.join(table_dir, version, _MANIFEST),
-        json.dumps(raw, separators=(",", ":")).encode(),
-    )
+    if marker not in raw["markers"]:
+        raw["markers"].append(marker)
+    _write_manifest_raw(fsio.join(table_dir, version), raw)
 
 
 def version_markers(
     table_dir: str, version: str, raw: dict | None = None
 ) -> list[str]:
-    """Marker names a committed version carries. The manifest's
-    ``markers`` list is authoritative when the key exists (every r8+
-    commit writes it, ``[]`` when none); pre-index manifests fall back to
-    listing the version dir — so watermark walks over fresh tables never
-    touch the filesystem listing API. Pass ``raw`` when the caller
-    already holds the raw manifest (the chain walk) to skip the read."""
+    """Marker names a committed version carries (its manifest's
+    ``markers`` index). Pass ``raw`` when the caller already holds the raw
+    manifest (the chain walk) to skip the read."""
     if raw is None:
         raw = _read_manifest_raw(table_dir, version)
-    if raw is not None and "markers" in raw:
-        return list(raw["markers"] or ())
-    try:
-        return fsio.ls(fsio.join(table_dir, version))
-    except (FileNotFoundError, OSError):
-        return []
+    return list(raw["markers"])
 
 
 def _read_manifest_raw(table_dir: str, version: str) -> Optional[dict]:
@@ -623,11 +509,12 @@ def _read_manifest_raw(table_dir: str, version: str) -> Optional[dict]:
     so consumers that never touch the file list should read raw and skip
     the fold. In-place manifest rewriters (``attach_stats``, bloom attach)
     MUST read raw — rewriting a folded view would silently materialize the
-    full file list back into a delta commit."""
+    full file list back into a delta commit. None when the version has
+    no manifest; raises on a manifest of another format."""
     p = fsio.join(table_dir, version, _MANIFEST)
     if not fsio.exists(p):
         return None
-    return json.loads(fsio.read_bytes(p))
+    return _load_manifest(p)
 
 
 _DELTA_KEYS = ("files_base", "files_add", "files_remove", "delta_depth")
@@ -658,7 +545,7 @@ def read_manifest(table_dir: str, version: str) -> Optional[dict]:
         out = {
             k: val
             for k, val in raw.items()
-            if k not in (_FILES_REF, _FILES_COUNT, _ENTRIES_REF)
+            if k not in (_FILES_COUNT, _ENTRIES_REF)
         }
         out["files"] = _full_files(table_dir, raw)
         return out
@@ -706,17 +593,15 @@ def _entries_under(
     def _full_scoped(raw: dict) -> set[str]:
         if "files" in raw:
             return {e for e in raw["files"] if _match(e)}
-        if _ENTRIES_REF in raw:
-            import pyarrow.compute as pc
+        import pyarrow.compute as pc
 
-            col = _read_entries_table(table_dir, raw[_ENTRIES_REF])["entry"]
-            out: set[str] = set()
-            for o in owners:
-                out.update(
-                    pc.filter(col, pc.starts_with(col, f"{o}/")).to_pylist()
-                )
-            return {e for e in out if not _is_abs_entry(e)}
-        return {e for e in _full_files(table_dir, raw) if _match(e)}
+        col = _read_entries_table(table_dir, raw[_ENTRIES_REF])["entry"]
+        out: set[str] = set()
+        for o in owners:
+            out.update(
+                pc.filter(col, pc.starts_with(col, f"{o}/")).to_pylist()
+            )
+        return {e for e in out if not _is_abs_entry(e)}
 
     raw = _read_manifest_raw(table_dir, version)
     if raw is None:
@@ -833,23 +718,16 @@ def write_manifest_delta(
     amplification. Field semantics otherwise identical to
     :func:`write_manifest`."""
     braw = _read_manifest_raw(table_dir, base)
-    depth = (
-        1
-        if braw is None or _is_full_manifest(braw)
-        else int(braw.get("delta_depth", 1)) + 1
-    )
-    if braw is None or depth > CHECKPOINT_EVERY:
-        bm = read_manifest(table_dir, base)
-        base_files = (
-            bm["files"]
-            if bm is not None
-            else [
-                f"{base}/{n}"
-                for n in _parquet_names(fsio.join(table_dir, base))
-            ]
+    if braw is None:
+        raise FileNotFoundError(
+            f"{table_dir}: delta base {base} has no manifest"
         )
+    depth = 1 if _is_full_manifest(braw) else braw["delta_depth"] + 1
+    if depth > CHECKPOINT_EVERY:
         rm = set(remove)
-        files = [e for e in base_files if e not in rm] + list(add)
+        files = [
+            e for e in read_manifest(table_dir, base)["files"] if e not in rm
+        ] + list(add)
         # CONSOLIDATE chain-scattered per-entry stats/blooms into the
         # checkpoint (one O(distinct owners) gather, amortized over
         # CHECKPOINT_EVERY commits): without this, a pruned read of an
@@ -860,41 +738,40 @@ def write_manifest_delta(
         # even survive the owners' manifests being vacuumed away.
         extra_fields = dict(extra_fields or {})
         entry_fields: dict = {}
-        if bm is not None:
-            res = _FieldResolver(table_dir)  # shared raw cache, both fields
-            own_blooms: dict = {}
-            for field in ("stats", _BLOOMS_FIELD):
-                cons = _gather_entry_field(
-                    table_dir, base, files, field, res=res
+        res = _FieldResolver(table_dir)  # shared raw cache, both fields
+        own_blooms: dict = {}
+        for field in ("stats", _BLOOMS_FIELD):
+            cons = _gather_entry_field(
+                table_dir, base, files, field, res=res
+            )
+            own = extra_fields.pop(field, None) or {}
+            if field == _BLOOMS_FIELD:
+                own_blooms = own
+            for e, rec in own.items():  # write-time auto-attach wins
+                cur_rec = cons.get(e) or {}  # may hold a None marker
+                cur_rec.update(rec)
+                cons[e] = cur_rec
+            if cons:
+                entry_fields[field] = cons
+            if field == _BLOOMS_FIELD:
+                # consolidate the COMMIT-LEVEL aggregate blooms too —
+                # union the chain's (and probed owners') agg bitsets
+                # so a miss probe keeps reading ≤ 1 sidecar per chain
+                # manifest after any number of checkpoints
+                from spookystuff_spark.sources.bloom_index import (
+                    consolidate_agg_fields,
                 )
-                own = extra_fields.pop(field, None) or {}
-                if field == _BLOOMS_FIELD:
-                    own_blooms = own
-                for e, rec in own.items():  # write-time auto-attach wins
-                    cur_rec = cons.get(e) or {}  # may hold a None marker
-                    cur_rec.update(rec)
-                    cons[e] = cur_rec
-                if cons:
-                    entry_fields[field] = cons
-                if field == _BLOOMS_FIELD:
-                    # consolidate the COMMIT-LEVEL aggregate blooms too —
-                    # union the chain's (and probed owners') agg bitsets
-                    # so a miss probe keeps reading ≤ 1 sidecar per chain
-                    # manifest after any number of checkpoints
-                    from spookystuff_spark.sources.bloom_index import (
-                        consolidate_agg_fields,
-                    )
 
-                    extra_fields.update(
-                        consolidate_agg_fields(
-                            table_dir, version, res, cons,
-                            extra_fields, own_blooms,
-                        )
+                extra_fields.update(
+                    consolidate_agg_fields(
+                        table_dir, version, res, cons,
+                        extra_fields, own_blooms,
                     )
-            # the gather ran: from here the fold chain is authoritative
-            # for per-entry fields — later gathers and readers never
-            # probe owner manifests again (see _CONSOLIDATED_KEY)
-            extra_fields[_CONSOLIDATED_KEY] = True
+                )
+        # the gather ran: from here the fold chain is authoritative
+        # for per-entry fields — later gathers and readers never
+        # probe owner manifests again (see _CONSOLIDATED_KEY)
+        extra_fields[_CONSOLIDATED_KEY] = True
         write_manifest(
             table_dir, version, files, schema_json, kind, parent=parent,
             extra_fields=extra_fields, entry_fields=entry_fields,
@@ -915,14 +792,11 @@ def write_manifest_delta(
     }
     if extra_fields:
         payload.update(extra_fields)
-    fsio.write_bytes(
-        fsio.join(table_dir, version, _MANIFEST),
-        json.dumps(payload, separators=(",", ":")).encode(),
-    )
+    _write_manifest_raw(fsio.join(table_dir, version), payload)
 
 
 _CORE_MANIFEST_KEYS = {
-    "files", _FILES_REF, _FILES_COUNT, _ENTRIES_REF, "schema", "kind",
+    _FORMAT_KEY, "files", _FILES_COUNT, _ENTRIES_REF, "schema", "kind",
     "parent", "ts_ms", "stats_ref", "blooms_ref", "consolidated",
     # agg blooms / spec-col coverage are spec-scoped like "blooms": a
     # content-preserving rewrite carrying them without the specs would
@@ -942,9 +816,8 @@ def carry_extra_fields(manifest: Optional[dict], exclude=()) -> dict:
     recorded via ``extra_fields`` (e.g. the BM25 index's corpus stats) —
     for a CONTENT-PRESERVING commit (compact / compact_dv / restore /
     delete_where_dv) to carry forward. Without this, maintenance commits
-    silently strip index metadata (the r6 append-carries-dv lesson,
-    generalized). Content-CHANGING commits must NOT blind-carry: their
-    owners advance such fields themselves."""
+    silently strip index metadata. Content-CHANGING commits must NOT
+    blind-carry: their owners advance such fields themselves."""
     if not manifest:
         return {}
     return {
@@ -961,8 +834,7 @@ def _is_abs_entry(entry: str) -> bool:
 def _check_readable(table_dir: str, v: str, cur: str | None) -> None:
     """Version-read guard. The tip WITH a manifest is committed by
     construction under the commit-file protocol (one cheap raw read, no
-    chain walk); everything else — explicit time travel, and the corrupt
-    LEGACY-pointer case where ``_LATEST`` names a manifest-less dir — must
+    chain walk); everything else — explicit time travel above all — must
     be on the committed chain or refuse loudly, never serve torn data."""
     if v == cur and _read_manifest_raw(table_dir, v) is not None:
         return
@@ -971,40 +843,22 @@ def _check_readable(table_dir: str, v: str, cur: str | None) -> None:
 
 
 def _entries_and_paths(
-    table_dir: str, version: str, manifest: Optional[dict]
+    table_dir: str, manifest: dict
 ) -> tuple[list[str], list[str]]:
-    """(relative manifest entries, full paths) for a snapshot — the pair
-    :func:`scan_entries` wants; legacy manifest-less dirs list their own
-    parquet files."""
-    if manifest is not None:
-        rel = list(manifest["files"])
-        return rel, [
-            e if _is_abs_entry(e) else fsio.join(table_dir, e) for e in rel
-        ]
-    vdir = fsio.join(table_dir, version)
-    names = _parquet_names(vdir)
-    return (
-        [f"{version}/{n}" for n in names],
-        [fsio.join(vdir, n) for n in names],
-    )
+    """(relative manifest entries, full paths) of a folded manifest — the
+    pair :func:`scan_entries` wants."""
+    rel = list(manifest["files"])
+    return rel, [
+        e if _is_abs_entry(e) else fsio.join(table_dir, e) for e in rel
+    ]
 
 
 def snapshot_files(table_dir: str, version: str) -> list[str]:
-    """Full paths of a snapshot's data files. Manifest-driven; a
-    manifest-less (legacy) committed dir falls back to listing its own
-    parquet files."""
+    """Full paths of a snapshot's data files, from its manifest."""
     m = read_manifest(table_dir, version)
-    if m is not None:
-        return [
-            e if _is_abs_entry(e) else fsio.join(table_dir, e)
-            for e in m["files"]
-        ]
-    vdir = fsio.join(table_dir, version)
-    return [
-        fsio.join(vdir, name)
-        for name, _ in fsio.file_infos(vdir)
-        if name.endswith(".parquet")
-    ]
+    if m is None:
+        raise FileNotFoundError(f"{table_dir}: {version} has no manifest")
+    return _entries_and_paths(table_dir, m)[1]
 
 
 def snapshot_schema_json(table_dir: str, version: str) -> Optional[str]:
@@ -1033,31 +887,29 @@ def _commit_snapshot(
     df_schema_json: str | None,
     table_dir: str,
     version: str,
-    extra_entries: Sequence[str] = (),
     kind: str = "upsert",
     marker: str | None = None,
     expected_parent=_UNCHECKED,
     extra_fields: dict | None = None,
     delta_base: str | None = None,
 ) -> None:
-    """Manifest (own files + ``extra_entries``) → optional marker → pointer
-    swap. The marker rides the same commit as the manifest: a crash before
-    the swap leaves a dangling, never-read dir; after it, marker and
-    snapshot are visible together — the hook streaming/sink.py uses for
-    exactly-once batch idempotence.
+    """Manifest (own files) → optional marker → commit file. The marker
+    rides the same commit as the manifest: a crash before the commit
+    leaves a dangling, never-read dir; after it, marker and snapshot are
+    visible together — the hook streaming/sink.py uses for exactly-once
+    batch idempotence.
 
     ``expected_parent``: the version the WRITER read its input snapshot
-    from. If the pointer no longer names it at commit time, another writer
+    from. If the tip no longer is it at commit time, another writer
     committed in between and this snapshot would erase their rows —
-    :class:`ConcurrentWriteError` is raised instead, the pointer stays
-    untouched, and the torn dir is ordinary vacuumable debris. The
+    :class:`ConcurrentWriteError` is raised instead, nothing commits,
+    and the torn dir is ordinary vacuumable debris. The
     manifest's chain link is the EXPECTED parent (the state the data was
     derived from), never a re-read.
 
     ``delta_base``: record the commit as an entry DELTA against that
-    version (own files added, nothing removed) instead of enumerating the
-    full carried list — the O(batch)-metadata append path
-    (:func:`write_manifest_delta`); ``extra_entries`` must be empty then."""
+    version (own files added, nothing removed) — the O(batch)-metadata
+    append path (:func:`write_manifest_delta`)."""
     if expected_parent is _UNCHECKED:
         parent = _latest(table_dir)
     else:
@@ -1070,15 +922,14 @@ def _commit_snapshot(
             )
     own = _own_entries(table_dir, version)
     if delta_base is not None:
-        assert not extra_entries, "delta commits carry by base, not by list"
         write_manifest_delta(
             table_dir, version, delta_base, own, (), df_schema_json, kind,
             parent=parent, extra_fields=extra_fields,
         )
     else:
         write_manifest(
-            table_dir, version, list(extra_entries) + own, df_schema_json,
-            kind, parent=parent, extra_fields=extra_fields,
+            table_dir, version, own, df_schema_json, kind, parent=parent,
+            extra_fields=extra_fields,
         )
     if marker:
         _stamp_marker(table_dir, version, marker)
@@ -1117,14 +968,11 @@ def _write_feed_kinds(
     )
 
 
-def feed_kinds(table_dir: str, version: str) -> Optional[set]:
-    """The distinct ``_change`` kinds recorded for the version's feed by
-    its writer (the ``_KINDS`` sidecar), or None for a pre-sidecar feed —
-    the reader must then derive them by scanning the rows."""
+def feed_kinds(table_dir: str, version: str) -> set:
+    """The distinct ``_change`` kinds recorded for the version's row feed
+    by its writer (the ``_KINDS`` sidecar every row-feed writer writes)."""
     p = fsio.join(table_dir, version, _CHANGES, _FEED_KINDS)
-    if fsio.exists(p):
-        return set(json.loads(fsio.read_bytes(p).decode()))
-    return None
+    return set(json.loads(fsio.read_bytes(p).decode()))
 
 
 def _write_change_feed_refs(
@@ -1136,10 +984,7 @@ def _write_change_feed_refs(
     from it). Zero extra data written — the appended rows are the feed."""
     feed = fsio.join(table_dir, version, _CHANGES)
     fsio.mkdirs(feed)
-    fsio.write_bytes(
-        fsio.join(feed, _MANIFEST),
-        json.dumps({"files": list(entries)}, separators=(",", ":")).encode(),
-    )
+    _write_manifest_raw(feed, {"files": list(entries)})
     fsio.write_bytes(fsio.join(feed, _KIND), kind.encode())
 
 
@@ -1166,17 +1011,18 @@ def _arrow_type_ok(t) -> bool:
 
 
 def parquet_schema_of(paths: Sequence[str]):
-    """Unified Spark ``StructType`` of a parquet file set, resolved
-    DRIVER-SIDE from the footers (pyarrow) — ``spark.read.parquet``
-    without an explicit schema runs a schema-inference JOB per call, a
-    pure fixed cost paid by every feed / deletion-vector / snapshot
-    re-read on every refresh (guide §1.2: don't compute what you can
-    read off metadata). Returns None when any footer is unreadable, the
-    footers disagree beyond arrow's unification, or a column's type is
-    outside the trusted flat-type list — callers then fall back to the
-    inference job, so this is an optimization with no behavior change."""
+    """Spark ``StructType`` of a parquet file set, resolved DRIVER-SIDE
+    from the footers (pyarrow, through :mod:`fsio`) —
+    ``spark.read.parquet`` without an explicit schema runs a
+    schema-inference JOB per call, a pure fixed cost paid by every feed /
+    deletion-vector / snapshot re-read on every refresh (guide §1.2:
+    don't compute what you can read off metadata). Returns None when any
+    footer is unreadable, the footer schemas are not all identical (the
+    inference read adopts ONE file's schema, so a pinned union would
+    expose different columns), or a column's type is outside the trusted
+    flat-type list — callers then fall back to the inference job, so this
+    is an optimization with no behavior change."""
     try:
-        import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -1188,8 +1034,12 @@ def parquet_schema_of(paths: Sequence[str]):
                 flat.append(p)
         schema = None
         for p in flat:
-            s = pq.read_schema(p)
-            schema = s if schema is None else pa.unify_schemas([schema, s])
+            with fsio.open_input(p) as f:
+                s = pq.read_schema(f)
+            if schema is None:
+                schema = s
+            elif not s.equals(schema):
+                return None
         if schema is None:
             return None
         if not all(_arrow_type_ok(f.type) for f in schema):
@@ -1222,15 +1072,8 @@ def change_files(table_dir: str, version: str) -> tuple[list[str], str | None]:
     if fsio.exists(kind_path):
         kind = fsio.read_bytes(kind_path).decode().strip() or None
     mpath = fsio.join(feed, _MANIFEST)
-    if fsio.exists(mpath):
-        m = json.loads(fsio.read_bytes(mpath))
-        return (
-            [
-                e if _is_abs_entry(e) else fsio.join(table_dir, e)
-                for e in m["files"]
-            ],
-            kind,
-        )
+    if fsio.exists(mpath):  # a reference feed (see _write_change_feed_refs)
+        return _entries_and_paths(table_dir, _load_manifest(mpath))[1], kind
     return [fsio.join(feed, n) for n in _parquet_names(feed)], kind
 
 
@@ -1241,30 +1084,17 @@ def rename_log_of(manifest: Optional[dict]) -> list[dict]:
     """Chronological rename EVENTS ``[{"v": commit, "old", "new"}, ...]`` —
     the per-entry column mapping: an entry owned by version w carries a
     column under the name it had AT w (files written after a rename carry
-    the then-current logical names; earlier files keep older ones).
-    Tables renamed by pre-r7 code carry only the collapsed ``renames``
-    map, and by the old refusal rule every entry predates every rename —
-    synthesized here as events newer than any real version name."""
-    if not manifest:
-        return []
-    log = manifest.get("rename_log")
-    if log:
-        return list(log)
-    renames = manifest.get("renames") or {}
-    # legacy: every event applies to every entry — the sentinel version
-    # must outrank any REAL version numerically (a 5-digit sentinel broke
-    # the moment a table crossed 99 999 commits)
-    return [
-        {"v": "v99999999999", "old": p, "new": l}
-        for p, l in renames.items()
-    ]
+    the then-current logical names; earlier files keep older ones). Every
+    rename commit writes the log, and every commit carrying renames
+    carries it forward."""
+    return list((manifest or {}).get("rename_log") or ())
 
 
 def _event_after_owner(ev_v: str, owner: str) -> bool:
     """Is a rename event committed at ``ev_v`` newer than files owned by
     ``owner``? Numeric comparison (:func:`_vnum` — lexical breaks at the
     v99999→v100000 width transition); ``owner == ''`` (absolute/external
-    entries) predates everything, the conservative legacy reading."""
+    entries) predates everything, the conservative reading."""
     return owner == "" or _vnum(ev_v) > _vnum(owner)
 
 
@@ -1274,27 +1104,12 @@ def physical_name_for_entry(
     """The column name entry files owned by ``owner`` carry for the
     current ``logical`` name: walk rename events newer than the owner
     backwards, un-applying each. Absolute (external) entries pass owner=''
-    so every event applies — the conservative legacy reading."""
+    so every event applies — the conservative reading."""
     name = logical
     for ev in reversed(list(rename_log)):
         if _event_after_owner(ev["v"], owner) and name == ev["new"]:
             name = ev["old"]
     return name
-
-
-def _pinned_rename_log(manifest: dict, v: str) -> list[dict]:
-    """The rename_log a commit at version ``v`` should carry forward: the
-    existing event log verbatim, or — for a legacy table that predates
-    event logs (collapsed ``renames`` map only) — events synthesized AT
-    ``v``: every carried entry predates ``v`` (legacy code refused
-    post-rename appends), and the commit's own files carry current
-    logical names, so pinning at ``v`` applies the map to exactly the old
-    entries and none of the new ones."""
-    log = manifest.get("rename_log")
-    if log:
-        return list(log)
-    renames = manifest.get("renames") or {}
-    return [{"v": v, "old": p, "new": l} for p, l in renames.items()]
 
 
 def retired_column_names(manifest: Optional[dict]) -> set[str]:
@@ -1336,14 +1151,14 @@ def _refuse_retired_names(
         )
 
 
-def _schema_map_fields(manifest: dict, version: str) -> dict:
+def _schema_map_fields(manifest: dict) -> dict:
     """The schema-evolution fields an append carries forward: the
-    collapsed ``renames`` map, the ``drops`` list, and the ``rename_log``
-    pinned for legacy tables (see :func:`_pinned_rename_log`)."""
+    collapsed ``renames`` map with its ``rename_log``, and the ``drops``
+    list."""
     out: dict = {}
     if manifest.get("renames"):
         out["renames"] = manifest["renames"]
-        out["rename_log"] = _pinned_rename_log(manifest, version)
+        out["rename_log"] = manifest["rename_log"]
     if manifest.get("drops"):
         out["drops"] = manifest["drops"]
     return out
@@ -1491,8 +1306,7 @@ def rename_column(table_dir: str, old: str, new: str) -> str:
     # the EVENT log (alongside the collapsed map) is what lets appends keep
     # flowing after a rename: files written later carry the new name, and
     # readers translate per entry by comparing owners against event commits
-    log = _pinned_rename_log(m, v)
-    log.append({"v": v, "old": old, "new": new})
+    log = rename_log_of(m) + [{"v": v, "old": old, "new": new}]
     extra = {"renames": renames, "rename_log": log}
     if m.get("partition_col"):
         extra["partition_col"] = m["partition_col"]
@@ -1580,7 +1394,7 @@ def read_table(
     v = version or cur
     _check_readable(table_dir, v, cur)
     m = read_manifest(table_dir, v)
-    rel, files = _entries_and_paths(table_dir, v, m)
+    rel, files = _entries_and_paths(table_dir, m)
     # per-entry physical→logical column translation (column-mapping
     # appends): scan_entries groups files by rename epoch
     df = scan_entries(spark, table_dir, m, rel, files)
@@ -1633,7 +1447,7 @@ def write_table(
             table_dir, v, _own_entries(table_dir, v), "upsert"
         )
     _commit_snapshot(
-        df.schema.json(), table_dir, v, (), "upsert", marker,
+        df.schema.json(), table_dir, v, "upsert", marker,
         extra_fields=_bloom_extra(df.sparkSession, table_dir, v, bloom_cols),
     )
     return v
@@ -1650,7 +1464,7 @@ def upsert(
 ) -> str:
     """MERGE: rows matching an update key are replaced, others kept, new keys
     inserted. One anti-join (update keys broadcast when small) + one union;
-    the new snapshot commits with a pointer swap. Returns the version.
+    the new snapshot commits through the commit file. Returns the version.
 
     ``feed_preimages=True`` additionally logs the REPLACED rows (the old
     values of matched update keys) to the change feed as
@@ -1707,7 +1521,7 @@ def upsert(
         else:
             _write_feed_kinds(table_dir, v, ["upsert"])
     _commit_snapshot(
-        merged.schema.json(), table_dir, v, (), "upsert", marker,
+        merged.schema.json(), table_dir, v, "upsert", marker,
         expected_parent=cur_v,
     )
     return v
@@ -1746,13 +1560,8 @@ def append_rows(
     _refuse_retired_names(table_dir, pm, rows.columns)
     v = _next_version(table_dir)
     rows.write.mode("errorifexists").parquet(fsio.join(table_dir, v))
-    prev_entries: list[str] = []
     schema_json = rows.schema.json()
-    if cur is not None and pm is None:  # legacy manifest-less snapshot
-        prev_entries = [
-            f"{cur}/{n}" for n in _parquet_names(fsio.join(table_dir, cur))
-        ]
-    elif pm is not None and pm.get("schema"):
+    if pm is not None and pm.get("schema"):
         # appended columns evolve the schema additively, like upsert
         schema_json = _union_schema_json(pm["schema"], rows.schema)
     if change_feed:
@@ -1766,12 +1575,11 @@ def append_rows(
     if pm is not None and pm.get("dv"):
         carried = {"dv": pm["dv"], "dv_keys": pm["dv_keys"]}
     if pm is not None:
-        carried.update(_schema_map_fields(pm, v))
+        carried.update(_schema_map_fields(pm))
     carried.update(_bloom_extra(spark, table_dir, v, bloom_cols) or {})
     _commit_snapshot(
-        schema_json, table_dir, v, prev_entries, "append", marker,
-        expected_parent=cur, extra_fields=carried or None,
-        delta_base=cur if pm is not None else None,
+        schema_json, table_dir, v, "append", marker,
+        expected_parent=cur, extra_fields=carried or None, delta_base=cur,
     )
     return v
 
@@ -1812,7 +1620,7 @@ def clone_table(src_dir: str, dst_dir: str) -> str:
     # absolute entries erase their owning commits, so PER-ENTRY rename-
     # epoch translation is impossible in a clone: a snapshot whose entries
     # all predate every rename event clones fine (the carried maps apply
-    # uniformly — the legacy semantics), but a MIXED-epoch snapshot
+    # uniformly to absolute entries), but a MIXED-epoch snapshot
     # (post-rename column-mapping appends) would silently null-read the
     # renamed column from its newer files; refuse and compact first.
     log = rename_log_of(src_m)
@@ -1839,7 +1647,7 @@ def clone_table(src_dir: str, dst_dir: str) -> str:
         extra["dv_keys"] = src_m["dv_keys"]
     if src_m.get("partition_col"):
         extra["partition_col"] = src_m["partition_col"]
-    extra.update(_schema_map_fields(src_m, v))
+    extra.update(_schema_map_fields(src_m))
     extra.update(
         carry_extra_fields(src_m, exclude=("renames", "drops", "rename_log"))
     )
@@ -1870,7 +1678,7 @@ def delete_where(
         # deleted rows come from the (immutable) PREVIOUS snapshot scan
         _write_change_feed(current.where(condition), table_dir, v, "delete")
     _commit_snapshot(
-        current.schema.json(), table_dir, v, (), "delete",
+        current.schema.json(), table_dir, v, "delete",
         expected_parent=cur,
     )
     return v
@@ -1884,7 +1692,7 @@ def compact(
     zorder_by: Sequence[str] | None = None,
 ) -> str:
     """Rewrite the current snapshot into ``num_files`` files (small-file
-    compaction; same manifest + pointer-swap commit, no change feed — the
+    compaction; same manifest + commit-file commit, no change feed — the
     logical content is unchanged). ``marker``: carry a stream batch marker
     into the compacted version so maintenance under a streaming sink keeps
     replay protection even after ``vacuum`` drops the marker's original
@@ -1914,7 +1722,7 @@ def compact(
     else:
         current.repartition(num_files).write.mode("errorifexists").parquet(vdir)
     _commit_snapshot(
-        current.schema.json(), table_dir, v, (), "compact", marker,
+        current.schema.json(), table_dir, v, "compact", marker,
         expected_parent=cur,
         extra_fields=carry_extra_fields(
             _read_manifest_raw(table_dir, cur),
@@ -1985,36 +1793,26 @@ def chain_desc(table_dir: str):
     early — watermark walks, where the newest marker is usually on the
     tip — pay O(steps taken), never the O(full history) of
     :func:`committed_versions`. Same chain rule: dirs off the parent
-    chain are invisible; a pre-chain legacy manifest falls back to every
-    earlier manifest-bearing version, newest-first."""
-    cur = _latest(table_dir)
+    chain are invisible; the walk ends at the root or at the first
+    version vacuum dropped the manifest of."""
     seen: set[str] = set()
-    v: str | None = cur
+    v: str | None = _latest(table_dir)
     while v and v not in seen:
         m = _read_manifest_raw(table_dir, v)
         if m is None:
-            return  # torn tip (corrupt pointer) or pre-manifest table end
+            return
         yield v, m
         seen.add(v)
-        if "parent" not in m:  # legacy manifest: no chain info recorded
-            for w in sorted(versions(table_dir), key=_vnum, reverse=True):
-                if _vnum(w) < _vnum(v) and w not in seen:
-                    mw = _read_manifest_raw(table_dir, w)
-                    if mw is not None:
-                        yield w, mw
-            return
         v = m["parent"]
 
 
 def committed_versions(table_dir: str) -> list[str]:
     """Versions safe to read: the manifest PARENT CHAIN walked back from the
-    ``_LATEST`` pointer (the commit-log rule). Dirs outside the chain are
-    crashed-writer debris regardless of what they contain — data files,
-    Spark's ``_SUCCESS``, even a complete manifest whose pointer swap never
-    happened (``_next_version`` leapfrogs them, so they can sit below the
-    pointer looking exactly like history that never was). A chain manifest
-    without a ``parent`` key (written before the chain rule) falls back to
-    accepting every earlier manifest-bearing version as its legacy prefix."""
+    tip (the commit-log rule). Dirs outside the chain are crashed-writer
+    debris regardless of what they contain — data files, Spark's
+    ``_SUCCESS``, even a complete manifest whose commit file never
+    appeared (``_next_version`` leapfrogs them, so they can sit below the
+    tip looking exactly like history that never was)."""
     return sorted((v for v, _ in chain_desc(table_dir)), key=_vnum)
 
 
@@ -2040,14 +1838,9 @@ def vacuum(
     nothing references it. Returns fully removed version names.
 
     Vacuum DELETES, so it never trusts the verified-pointer fast path: the
-    tip is resolved from the authoritative ``_commits`` listing (a stale
-    pointer — e.g. a crashed legacy-format writer that committed but never
-    rewrote it — would otherwise make vacuum treat the real tip as
-    dangling debris and destroy it), and a stale pointer found here is
-    healed to the single-line form so every other resolver re-checks."""
+    tip it protects is resolved from the authoritative ``_commits``
+    listing."""
     cur = _latest_from_listing(table_dir)
-    if cur is not None and cur != _latest(table_dir):
-        _swap_pointer(table_dir, cur)  # heal: unverifiable ⇒ listing wins
     vs = versions(table_dir)
     committed = committed_versions(table_dir)
     dangling = [v for v in vs if v not in committed]
@@ -2155,7 +1948,7 @@ def vacuum(
                 for f in fields:
                     new_raw.pop(f, None)
                     new_raw.pop(f"{f}_ref", None)
-                for k in (_FILES_REF, _FILES_COUNT, _ENTRIES_REF):
+                for k in (_FILES_COUNT, _ENTRIES_REF):
                     new_raw.pop(k, None)
                 # one write carries the file list AND the gathered fields
                 # (parquet entry table above the inline threshold)
@@ -2195,10 +1988,7 @@ def vacuum(
             # the rewrite just consolidated every reachable record: the
             # manifest is authoritative for per-entry fields from here
             new_raw[_CONSOLIDATED_KEY] = True
-            fsio.write_bytes(
-                fsio.join(table_dir, v, _MANIFEST),
-                json.dumps(new_raw, separators=(",", ":")).encode(),
-            )
+            _write_manifest_raw(fsio.join(table_dir, v), new_raw)
     removed = []
     for v in drop + dangling:
         if v == cur:
@@ -2210,7 +2000,7 @@ def vacuum(
         # commit slot belongs to the writer that WON that race — deleting
         # it blindly would retract the winner's commit.
         mv = _read_manifest_raw(table_dir, v)
-        if mv is not None and "parent" in mv:
+        if mv is not None:
             cf = fsio.join(
                 table_dir, _COMMITS, _commit_file_name(mv["parent"])
             )
@@ -2219,7 +2009,6 @@ def vacuum(
                     fsio.delete_file(cf, missing_ok=True)
             except (FileNotFoundError, OSError):
                 pass
-        fsio.delete_file(fsio.join(table_dir, _COMMITS, v), missing_ok=True)
         vdir = fsio.join(table_dir, v)
         # recursive: partitioned layouts nest files under __part=*/ subdirs
         names = fsio.list_files_recursive(vdir)
@@ -2449,11 +2238,7 @@ def collect_file_stats(
 ) -> dict:
     """:func:`profile_entries` over a committed snapshot's OWN files."""
     m = read_manifest(table_dir, version)
-    entries = (
-        [e for e in m["files"] if e.startswith(f"{version}/")]
-        if m is not None
-        else [f"{version}/{n}" for n in _parquet_names(fsio.join(table_dir, version))]
-    )
+    entries = [e for e in m["files"] if e.startswith(f"{version}/")]
     return profile_entries(table_dir, entries, cols)
 
 
@@ -2668,10 +2453,7 @@ def _merge_field_into_raw(
     raw.pop(field, None)
     raw.pop(f"{field}_ref", None)
     raw.update(_field_fields(table_dir, version, field, recorded))
-    fsio.write_bytes(
-        fsio.join(table_dir, version, _MANIFEST),
-        json.dumps(raw, separators=(",", ":")).encode(),
-    )
+    _write_manifest_raw(fsio.join(table_dir, version), raw)
 
 
 def attach_stats(table_dir: str, cols: Sequence[str]) -> int:
@@ -3144,9 +2926,8 @@ def read_table_with_lineage(
         raise FileNotFoundError(f"no committed version in {table_dir}")
     v = version or cur
     _check_readable(table_dir, v, cur)
-    mm = read_manifest(table_dir, v)
-    rel, files = _entries_and_paths(table_dir, v, mm)
-    m = mm or {"files": []}
+    m = read_manifest(table_dir, v)
+    rel, files = _entries_and_paths(table_dir, m)
     schema_json = m.get("schema")
     schema = (
         StructType.fromJson(json.loads(schema_json)) if schema_json else None

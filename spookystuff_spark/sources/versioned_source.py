@@ -124,12 +124,12 @@ def _read_arrow(
 
 class _BatchReader(DataSourceReader):
     def __init__(self, table_dir: str, version: str, schema: StructType):
-        self.files = U.snapshot_files(table_dir, version)
+        m = U.read_manifest(table_dir, version)
+        self._entries, self.files = U._entries_and_paths(table_dir, m)
         self.spark_schema = schema
         # merge-on-read: deletion vectors (if any) apply per batch — the
         # DataSource scans raw files, so skipping this would resurrect
         # deleted rows the native read_table correctly hides
-        m = U.read_manifest(table_dir, version) or {}
         self.dv_paths = [fsio.join(table_dir, e) for e in m.get("dv", [])]
         self.dv_keys = m.get("dv_keys") or []
         # metadata-only column renames: logical -> physical file names,
@@ -137,18 +137,13 @@ class _BatchReader(DataSourceReader):
         # different rename epochs carry different physical names); dropped
         # physical names ride along so the extra-column refusal
         # distinguishes "deliberately dropped" from "corrupt footer"
-        self._entries = (m.get("files") or [None] * len(self.files))
         log = U.rename_log_of(m)
         drops = list(m.get("drops") or ())
         lnames = [f.name for f in schema.fields]
         self._colmaps: dict = {}  # file path -> per-file colmap
         epoch_cache: dict = {}
         for e, path in zip(self._entries, self.files):
-            owner = (
-                ""
-                if e is None or U._is_abs_entry(e)
-                else e.split("/", 1)[0]
-            )
+            owner = "" if U._is_abs_entry(e) else e.split("/", 1)[0]
             key = tuple(
                 i
                 for i, ev in enumerate(log)
@@ -196,9 +191,7 @@ class _BatchReader(DataSourceReader):
             LessThanOrEqual,
         )
 
-        def keeps(entry: str | None, f) -> bool:
-            if entry is None:
-                return True
+        def keeps(entry: str, f) -> bool:
             col = f.attribute[0] if len(f.attribute) == 1 else None
             if col is None:
                 return True
@@ -371,8 +364,7 @@ class _ChangeFeedReader(DataSourceStreamReader):
         # then-current names; each feed partition gets a colmap to its
         # epoch — the streaming twin of incremental._changes_since's
         # translation. A rename commit always carries its event log
-        # (rename_column writes it); legacy logless renames simply leave
-        # no events and the extra-column fail-fast stays the honest guard.
+        # (rename_column writes it).
         events: list[dict] = []
         drops: list[str] = []
         restores: set[str] = set()
@@ -380,7 +372,7 @@ class _ChangeFeedReader(DataSourceStreamReader):
             if int(v[1:]) <= start["version"]:
                 continue
             m = U._read_manifest_raw(self.table_dir, v) or {}
-            if m.get("kind") == "rename" and m.get("rename_log"):
+            if m.get("kind") == "rename":
                 events.append(m["rename_log"][-1])
             if m.get("kind") == "restore":
                 restores.add(v)
@@ -530,8 +522,8 @@ class _VersionedArrowWriter(DataSourceArrowWriter):
     def _commit_files(self, messages, marker: str | None = None) -> None:
         staged = [m.filename for m in messages if m and m.filename]
         # the parent captured HERE is both the chain link and the
-        # lost-update guard: prev_entries derive from it, and the pointer
-        # must still name it at swap time (upsert.ConcurrentWriteError
+        # lost-update guard: the delta base is it, and the tip must still
+        # be it at commit time (upsert.ConcurrentWriteError
         # otherwise — same best-effort OCC as the native writers)
         parent = U._latest(self.table_dir)
         v = U._next_version(self.table_dir)
@@ -539,7 +531,6 @@ class _VersionedArrowWriter(DataSourceArrowWriter):
         fsio.mkdirs(vdir)
         for f in staged:
             fsio.move(fsio.join(self.staging, f), fsio.join(vdir, f))
-        prev_entries: list[str] = []
         dv_fields = None
         delta_base = None
         if not self.overwrite and parent is not None:
@@ -557,26 +548,17 @@ class _VersionedArrowWriter(DataSourceArrowWriter):
                 f["name"] for f in _json.loads(self.schema_json)["fields"]
             ]
             U._refuse_retired_names(self.table_dir, m, schema_names)
-            if m is not None:
-                delta_base = parent
-            else:  # legacy manifest-less parent: enumerate once
-                prev_entries = [
-                    f"{parent}/{n}"
-                    for n in U._parquet_names(
-                        fsio.join(self.table_dir, parent)
-                    )
-                ]
+            delta_base = parent
             # an append is metadata-only: like upsert.append_rows, it must
             # CARRY the parent's accumulated deletion vectors — dropping
             # them would resurrect deleted rows (and leave the vector files
             # unreferenced for vacuum to destroy) — and the schema maps,
             # or carried files' physical names would stop translating
-            if m and m.get("dv"):
+            if m.get("dv"):
                 dv_fields = {"dv": m["dv"], "dv_keys": m["dv_keys"]}
-            if m is not None:
-                maps = U._schema_map_fields(m, v)
-                if maps:
-                    dv_fields = {**(dv_fields or {}), **maps}
+            maps = U._schema_map_fields(m)
+            if maps:
+                dv_fields = {**(dv_fields or {}), **maps}
         own = [f"{v}/{f}" for f in staged]
         U._write_change_feed_refs(self.table_dir, v, own, "upsert")
         fsio.touch(fsio.join(vdir, "_SUCCESS"))
@@ -590,7 +572,7 @@ class _VersionedArrowWriter(DataSourceArrowWriter):
             U.write_manifest(
                 self.table_dir,
                 v,
-                prev_entries + own,
+                own,
                 self.schema_json,
                 kind,
                 parent=parent,

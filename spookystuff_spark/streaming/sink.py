@@ -3,9 +3,9 @@
 ``foreachBatch`` gives at-least-once micro-batch delivery — after a crash the
 last batch is REPLAYED with the same ``batch_id``. Exactly-once therefore
 needs an idempotent commit: each snapshot produced by the sink records the
-batch id that wrote it (a ``_BATCH_<app>_<id>`` marker dropped inside the
-immutable version dir BEFORE the pointer swap, so marker and data commit
-atomically together), and a replayed batch with id ≤ the last committed
+batch id that wrote it (a ``_BATCH_<app>_<id>`` marker in the version's
+manifest marker index, stamped BEFORE the commit file, so marker and data
+commit atomically together), and a replayed batch with id ≤ the last committed
 marker IN THE SAME APP NAMESPACE is a no-op. This is precisely the
 Delta/Iceberg ``txnAppId``/``txnVersion`` protocol, re-expressed over
 sources/upsert.py's manifest tables — BOTH halves: the batch id alone is not
@@ -66,9 +66,7 @@ def _batch_marker(
     from spookystuff_spark.sources import upsert as U
 
     app_key = None if app_id is None else _APP_SAFE.sub("-", app_id)
-    # manifest marker index when present (one raw read, or free when the
-    # chain walk passes it in), directory listing only for pre-index
-    # versions — see upsert.version_markers
+    # the manifest marker index (free when the chain walk passes it in)
     for f in U.version_markers(table_dir, version, raw=raw):
         parsed = _parse_marker(f)
         if parsed is None:

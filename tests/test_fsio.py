@@ -105,15 +105,15 @@ def _put_parquet(fs, path: str, n: int) -> None:
 
 
 def test_manifest_protocol_on_mock_fs(mockfs):
-    """Manifest-reference appends + pointer swap + vacuum carry-forward on a
-    store with no hard links and no POSIX rename-into-dir — the exact
+    """Manifest-reference appends + commit-file CAS + vacuum carry-forward
+    on a store with no hard links and no POSIX rename-into-dir — the exact
     object-store shape the round-4 hard-link design could not support."""
     tdir = "mock://tbl"
-    # v1: one data file, committed by manifest + pointer
+    # v1: one data file, committed by manifest + commit file
     mockfs.create_dir("tbl/v00001", recursive=True)
     _put_parquet(mockfs, "tbl/v00001/part-0.parquet", 3)
     U.write_manifest(tdir, "v00001", ["v00001/part-0.parquet"], None, "upsert")
-    U._swap_pointer(tdir, "v00001")
+    U._finalize_commit(tdir, "v00001", None)
     assert U.committed_versions(tdir) == ["v00001"]
 
     # v2: metadata-only append — new file + carried reference, no copy
@@ -127,7 +127,7 @@ def test_manifest_protocol_on_mock_fs(mockfs):
         "append",
         parent="v00001",
     )
-    U._swap_pointer(tdir, "v00002")
+    U._finalize_commit(tdir, "v00002", "v00001")
     assert U.committed_versions(tdir) == ["v00001", "v00002"]
     files = U.snapshot_files(tdir, "v00002")
     assert [fsio.basename(fsio.parent(f)) for f in files] == [
@@ -149,7 +149,8 @@ def test_pointer_swap_on_mock_fs(mockfs):
     tdir = "mock://ptr"
     mockfs.create_dir("ptr", recursive=True)
     assert U._latest(tdir) is None
-    U._swap_pointer(tdir, "v00007")
+    U._finalize_commit(tdir, "v00007", None)
+    assert fsio.read_bytes(fsio.join(tdir, U._POINTER)) == b"v00007\nv00000.c"
     assert U._latest(tdir) == "v00007"
     assert U._next_version(tdir) == "v00008"
 
@@ -211,3 +212,105 @@ def test_conditional_put_hook_true_cas_on_object_store(mockfs):
 
     with _pytest.raises(FileExistsError):
         fsio.create_exclusive("mock://cas2/x", b"2")
+
+
+# ------------------------------- non-POSIX: Spark + lakehouse end to end
+
+
+@pytest.fixture
+def spark_mockfs(spark, tmp_path):
+    """``mock://<auth>/...`` served to BOTH sides from one local dir: the
+    driver's fsio through a registered pyarrow ``SubTreeFileSystem``, and
+    Spark through Hadoop's ``ViewFileSystemOverloadScheme`` (the mount
+    table's fallback link maps the scheme onto the same dir). Spark reads
+    and writes data files as on any store, while a driver-side path that
+    bypasses fsio — a raw ``pq.ParquetFile(path)`` — cannot open a
+    ``mock://`` path. Yields (``mock://`` root, the local dir behind it).
+    The authority is unique per test: Hadoop caches one FileSystem per
+    scheme and authority."""
+    from pyarrow.fs import LocalFileSystem, SubTreeFileSystem
+
+    auth = f"lake{abs(hash(str(tmp_path)))}"
+    hadoop = {
+        "fs.mock.impl":
+            "org.apache.hadoop.fs.viewfs.ViewFileSystemOverloadScheme",
+        "fs.viewfs.overload.scheme.target.file.impl":
+            "org.apache.hadoop.fs.LocalFileSystem",
+        f"fs.viewfs.mounttable.{auth}.linkFallback":
+            f"file://{tmp_path}/{auth}",
+    }
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    for k, v in hadoop.items():
+        conf.set(k, v)
+    fsio.register_fs(
+        "mock", SubTreeFileSystem(str(tmp_path), LocalFileSystem())
+    )
+    yield f"mock://{auth}", f"{tmp_path}/{auth}"
+    fsio.unregister_fs("mock")
+    for k in hadoop:
+        conf.unset(k)
+
+
+def test_lakehouse_chains_on_mock_fs(spark, spark_mockfs):
+    """The lakehouse chains whose driver-side storage IO must all go
+    through fsio: a MERGE carrying deletion vectors, an IVM refresh over
+    an upserted source, and a bloom-pruned point lookup."""
+    import pyspark.sql.functions as F
+
+    from spookystuff_spark.sources.bloom_index import read_table_points
+    from spookystuff_spark.sources.incremental import refresh_aggregate
+    from spookystuff_spark.sources.partitioned_table import (
+        upsert_partitioned,
+        write_table_partitioned,
+    )
+
+    root, local_root = spark_mockfs
+
+    rows = spark.createDataFrame(
+        [(i, f"p{i % 3}", i) for i in range(12)], "k long, p string, v long"
+    )
+
+    # DV-carrying partitioned MERGE: keys 0/6 deleted, only 0 re-upserted
+    t = f"{root}/part"
+    write_table_partitioned(rows, t, "p")
+    U.delete_where_dv(spark, t, F.col("k") % 6 == 0, ["k"])
+    upsert_partitioned(
+        spark, t, rows.where("k = 0").withColumn("v", F.lit(99)), ["k"], "p"
+    )
+    got = {r["k"]: r["v"] for r in U.read_table(spark, t).collect()}
+    assert got[0] == 99 and 6 not in got and len(got) == 11
+    assert U._read_manifest_raw(t, U._latest(t))["dv"]
+
+    # IVM refresh over a preimage-logging upserted source
+    src, dst = f"{root}/src", f"{root}/agg"
+    U.write_table(rows, src)
+    refresh_aggregate(spark, src, dst, ["p"], ["v"])
+    U.upsert(
+        spark, src, rows.where("k < 3").withColumn("v", F.lit(100)), ["k"],
+        feed_preimages=True,
+    )
+    refresh_aggregate(spark, src, dst, ["p"], ["v"])
+    agg = {
+        r["p"]: r["v_sum"]
+        for r in U.read_table(spark, dst).select("p", "v_sum").collect()
+    }
+    want = {
+        r["p"]: r["s"]
+        for r in U.read_table(spark, src)
+        .groupBy("p")
+        .agg(F.sum("v").alias("s"))
+        .collect()
+    }
+    assert agg == want
+
+    # bloom point lookups over write-time-attached blooms. The attach
+    # publishes sidecars from executor tasks, which resolve a path from
+    # its URI alone (registrations are driver-side), so the table is
+    # written through the local dir and probed through mock://
+    U.write_table(
+        rows.repartition(3), f"{local_root}/bloom", bloom_cols=["k"]
+    )
+    b = f"{root}/bloom"
+    (hit, _), (miss, info) = read_table_points(spark, b, "k", [4, 1000])
+    assert [r["v"] for r in hit.collect()] == [4]
+    assert miss.count() == 0 and info["skipped_bloom"] > 0

@@ -5,6 +5,8 @@ refresh markers; loud refusal when preimages are missing."""
 
 from __future__ import annotations
 
+import json
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -36,7 +38,9 @@ def _got(spark, dst):
     }
 
 
-def test_fold_tracks_recompute_through_all_commit_kinds(spark, tmp_path):
+def test_fold_tracks_recompute_through_all_commit_kinds(
+    spark, tmp_path, monkeypatch
+):
     src = str(tmp_path / "src")
     dst = str(tmp_path / "agg")
     # v1 baseline
@@ -70,6 +74,53 @@ def test_fold_tracks_recompute_through_all_commit_kinds(spark, tmp_path):
     n = len(U.committed_versions(dst))
     assert refresh_aggregate(spark, src, dst, ["grp"], ["val"]) is None
     assert len(U.committed_versions(dst)) == n
+
+    # v6 delta, v7 checkpoint (fold depth capped at 1)
+    monkeypatch.setattr(U, "CHECKPOINT_EVERY", 1)
+    U.append_rows(spark, src, _rows(spark, [(6, "a", 1)]))
+    v7 = U.append_rows(spark, src, _rows(spark, [(7, "b", 2)]))
+    assert U._read_manifest_raw(src, v7)["consolidated"]
+    refresh_aggregate(spark, src, dst, ["grp"], ["val"])
+    assert _got(spark, dst) == _expected(spark, src)
+
+    # format guard: every manifest written — table and view, full,
+    # checkpoint and delta, and the reference change feeds — is stamped
+    from spookystuff_spark import fsio
+
+    kinds = set()
+    for table in (src, dst):
+        for rel in fsio.list_files_recursive(table):
+            if rel.endswith(U._MANIFEST):
+                path = fsio.join(table, rel)
+                raw = json.loads(fsio.read_bytes(path))
+                assert raw[U._FORMAT_KEY] == U.FORMAT_VERSION, path
+                kinds.add(
+                    "feed" if f"/{U._CHANGES}/" in rel
+                    else "delta" if "files_base" in raw
+                    else "full"
+                )
+    assert kinds == {"feed", "delta", "full"}
+
+    # ... and every read refuses a manifest stamped otherwise or unstamped
+    def restamp(path, stamp):
+        raw = json.loads(fsio.read_bytes(path))
+        raw.pop(U._FORMAT_KEY, None)
+        if stamp is not None:
+            raw[U._FORMAT_KEY] = stamp
+        fsio.write_bytes(path, json.dumps(raw).encode())
+
+    tip = fsio.join(src, v7, U._MANIFEST)
+    feed = fsio.join(src, v7, U._CHANGES, U._MANIFEST)
+    for stamp in (None, U.FORMAT_VERSION + 1):
+        restamp(tip, stamp)
+        with pytest.raises(ValueError, match="format"):
+            U.read_table(spark, src)
+        restamp(tip, U.FORMAT_VERSION)
+        restamp(feed, stamp)
+        with pytest.raises(ValueError, match="format"):
+            U.change_files(src, v7)
+        restamp(feed, U.FORMAT_VERSION)
+    assert U.read_table(spark, src).count() == 6
 
 
 def test_group_vanishes_at_zero_count(spark, tmp_path):
@@ -316,10 +367,7 @@ def test_watermark_lookup_reads_manifests_not_listings(
 ):
     """The _SRC_ watermark walk answers from the manifest's ``markers``
     index — zero directory listings on the hot path (a view refreshed
-    rarely against a busy table used to pay one ls per walked version).
-    Pre-index manifests (key absent) still fall back to listing."""
-    import json
-
+    rarely against a busy table used to pay one ls per walked version)."""
     from spookystuff_spark import fsio
     from spookystuff_spark.sources.incremental import newest_marker
 
@@ -337,15 +385,6 @@ def test_watermark_lookup_reads_manifests_not_listings(
     monkeypatch.setattr(fsio, "ls", no_ls)
     assert last_processed_version(dst) == wm
     monkeypatch.undo()
-    # pre-index manifest (simulated: strip the markers key): ls fallback
-    tip = U.committed_versions(dst)[-1]
-    raw = U._read_manifest_raw(dst, tip)
-    del raw["markers"]
-    fsio.write_bytes(
-        fsio.join(dst, tip, U._MANIFEST),
-        json.dumps(raw, separators=(",", ":")).encode(),
-    )
-    assert last_processed_version(dst) == wm  # marker FILE still found
     # and maintenance carries the watermark in the manifest: a compact +
     # vacuum of the marker-bearing versions keeps the fold exactly-once
     src2, dst2 = str(tmp_path / "s2"), str(tmp_path / "d2")

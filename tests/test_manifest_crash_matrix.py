@@ -1,13 +1,15 @@
 """Crash-safety matrix for the manifest commit protocol (sources/upsert.py).
 
-A writer commits in three steps: (1) write data files into the next
-version dir, (2) write ``_MANIFEST.json`` (+ optional marker), (3) swap
-the ``_LATEST`` pointer. This matrix kills a simulated writer after each
-step and asserts, for every crash point: readers still see exactly the
-old committed state; ``committed_versions`` never exposes the torn
-version; the NEXT writer leapfrogs the debris and commits cleanly; and
-``vacuum`` removes the debris without touching live data — including
-data files that later versions carry forward by manifest reference.
+A writer commits in four steps: (1) write data files into the next
+version dir, (2) write ``_MANIFEST.json`` (+ optional marker), (3) create
+the parent-keyed commit file ``_commits/<parent>.c``, (4) refresh the
+``_LATEST`` pointer cache. This matrix kills a simulated writer after
+each step and asserts, for every crash point: readers see exactly the
+old committed state before step 3 and the new one after it;
+``committed_versions`` never exposes a torn version; the NEXT writer
+leapfrogs the debris and commits cleanly; and ``vacuum`` removes the
+debris without touching live data — including data files that later
+versions carry forward by manifest reference.
 """
 
 from __future__ import annotations
@@ -101,44 +103,24 @@ def test_crash_between_append_chain_preserves_references(spark, seeded):
 
 
 def test_corrupt_pointer_self_heals_via_commit_files(spark, seeded):
-    """``_LATEST`` is only a cache once per-version commit files exist: a
-    corrupted pointer (external damage, non-protocol writer) is simply
-    ignored — the tip is max(``_commits``) and every read still works."""
+    """``_LATEST`` is only a cache of the commit files: a corrupted pointer
+    (external damage, non-protocol writer) is simply ignored — the tip is
+    max(``_commits``) and every read still works."""
     tdir = seeded
     v = U._next_version(tdir)
     _mk(spark, [(9, "torn")]).write.parquet(fsio.join(tdir, v))
-    U._swap_pointer(tdir, v)  # cache corrupted: names a manifest-less dir
-    assert U._latest(tdir) == "v00001"  # commit files win
+    # cache corrupted: names a manifest-less dir, in both pointer shapes
+    for ptr in (v, f"{v}\n{U._commit_file_name('v00001')}"):
+        fsio.write_bytes(fsio.join(tdir, U._POINTER), ptr.encode())
+        assert U._latest(tdir) == "v00001"  # commit files win
     assert U.committed_versions(tdir) == ["v00001"]
     assert {
         (r["k"], r["v"]) for r in U.read_table(spark, tdir).collect()
     } == {(1, "a"), (2, "b")}
 
 
-def test_corrupt_pointer_refuses_loudly_on_legacy_table(spark, seeded):
-    """A pre-commit-file (legacy) table has only the pointer: naming a
-    manifest-less dir can only mean corruption, and the table must refuse
-    EVERY read — fail loudly, never serve torn data or silently guess an
-    older tip; recovery is an operator repoint of ``_LATEST``."""
-    tdir = seeded
-    fsio.delete_dir(fsio.join(tdir, "_commits"))  # simulate a legacy table
-    v = U._next_version(tdir)
-    _mk(spark, [(9, "torn")]).write.parquet(fsio.join(tdir, v))
-    U._swap_pointer(tdir, v)  # pointer says v2 but v2 has no manifest
-    assert U.committed_versions(tdir) == []
-    with pytest.raises(FileNotFoundError):
-        U.read_table(spark, tdir, v)
-    with pytest.raises(FileNotFoundError):
-        U.read_table(spark, tdir, "v00001")
-    # operator recovery: repoint to the last good version
-    U._swap_pointer(tdir, "v00001")
-    assert {
-        (r["k"], r["v"]) for r in U.read_table(spark, tdir).collect()
-    } == {(1, "a"), (2, "b")}
-
-
 def test_stream_marker_rides_the_manifest_commit(spark, seeded):
-    """A marker dropped before the pointer swap is invisible until the
+    """A marker stamped before the commit file is invisible until the
     commit completes — exactly-once bookkeeping can't run ahead of data."""
     from spookystuff_spark.streaming.sink import last_committed_batch
 
@@ -149,8 +131,8 @@ def test_stream_marker_rides_the_manifest_commit(spark, seeded):
         tdir, v, [f"{v}/{n}" for n in U._parquet_names(fsio.join(tdir, v))],
         None, "upsert",
     )
-    fsio.touch(fsio.join(tdir, v, "_BATCH_app_7"))
-    # crash before pointer swap: the marker must NOT count
+    U._stamp_marker(tdir, v, "_BATCH_app_7")
+    # crash before the commit file: the marker must NOT count
     assert last_committed_batch(tdir, "app") is None
 
 
@@ -170,7 +152,7 @@ def test_concurrent_writer_conflict_detected(spark, seeded):
     )
     with pytest.raises(U.ConcurrentWriteError):
         U._commit_snapshot(
-            None, tdir, v, (), "upsert", expected_parent=stale_parent
+            None, tdir, v, "upsert", expected_parent=stale_parent
         )
     # nothing moved: the fast writer's state is intact, debris vacuums
     assert _state(spark, tdir) == {(1, "a"), (2, "b"), (3, "c")}
@@ -203,30 +185,6 @@ def test_crash_after_commit_file_before_pointer_update(spark, seeded):
     # the next commit proceeds normally from the true tip
     U.upsert(spark, tdir, _mk(spark, [(4, "d")]), ["k"])
     assert _state(spark, tdir) == {(3, "c"), (4, "d")}
-
-
-def test_crash_after_legacy_commit_file_before_pointer_update(spark, seeded):
-    """Same crash under the PRE-r7 protocol (legacy ``vNNNNN`` commit
-    entries, single-line pointer): the single-line pointer is unverifiable
-    by construction, so the tip resolves via the authoritative listing and
-    the legacy commit file still wins."""
-    tdir = seeded
-    v = U._next_version(tdir)
-    _mk(spark, [(3, "c")]).write.parquet(fsio.join(tdir, v))
-    U.write_manifest(
-        tdir, v, [f"{v}/{n}" for n in U._parquet_names(fsio.join(tdir, v))],
-        None, "upsert", parent="v00001",
-    )
-    # a legacy writer's whole commit state: legacy-named entry + the
-    # single-line pointer form it would have left behind on crash
-    fsio.delete_file(
-        fsio.join(tdir, "_commits", U._commit_file_name(None))
-    )
-    fsio.create_exclusive(fsio.join(tdir, "_commits", "v00001"), b"")
-    fsio.create_exclusive(fsio.join(tdir, "_commits", v), b"")
-    U._swap_pointer(tdir, "v00001")  # stale AND unverifiable
-    assert U._latest(tdir) == v
-    assert _state(spark, tdir) == {(3, "c")}
 
 
 def test_warm_table_hot_path_never_lists_commits(spark, seeded, monkeypatch):
@@ -274,7 +232,7 @@ def test_concurrent_commit_exactly_one_wins(spark, seeded):
         barrier.wait()
         try:
             U._commit_snapshot(
-                None, tdir, v, (), "upsert", expected_parent="v00001"
+                None, tdir, v, "upsert", expected_parent="v00001"
             )
             outcomes.append("ok")
         except U.ConcurrentWriteError:
@@ -356,7 +314,7 @@ def test_different_name_same_parent_race_one_winner(spark, seeded):
         barrier.wait()
         try:
             U._commit_snapshot(
-                None, tdir, v, (), "upsert", expected_parent="v00001"
+                None, tdir, v, "upsert", expected_parent="v00001"
             )
             outcomes[v] = "ok"
         except U.ConcurrentWriteError:
@@ -398,7 +356,7 @@ def test_ordered_same_parent_race_lower_commits_first(spark, seeded):
     assert U._latest(tdir) == "v00001"
 
     # A commits fully and reports success
-    U._commit_snapshot(None, tdir, "v00002", (), "upsert",
+    U._commit_snapshot(None, tdir, "v00002", "upsert",
                        expected_parent="v00001")
     assert U._latest(tdir) == "v00002"
 
@@ -489,7 +447,10 @@ def test_version_ordering_survives_the_width_transition(tmp_path):
     assert U._latest(tdir) == "v100000"
     # verified-pointer path: a stale pointer BELOW the width transition
     # still walks forward across it
-    U._swap_pointer(tdir, "v99999", "v99998")
+    fsio.write_bytes(
+        fsio.join(tdir, U._POINTER),
+        f"v99999\n{U._commit_file_name('v99998')}".encode(),
+    )
     assert U._latest(tdir) == "v100000"
     assert U.committed_versions(tdir) == ["v99999", "v100000"]
     assert U._next_version(tdir) == "v100001"

@@ -307,14 +307,11 @@ def test_clone_refuses_mixed_rename_epochs(spark, tmp_path):
 
 def test_checkpoint_file_list_spills_to_compressed_sidecar(tmp_path):
     """Above CHECKPOINT_INLINE_MAX entries a full (checkpoint) manifest
-    stores its file list in the parquet entry-table sidecar (r9; r8 used
-    zlib) — the manifest JSON stays O(1) bytes (raw top-level consumers
-    never parse the list; at 1M files the inline encoding is ~100 MB
-    re-parsed on every fold), the sidecar is far smaller than inline
-    JSON, and read_manifest folds transparently. The legacy zlib form
-    still READS (compat below)."""
-    import zlib as _zlib
-
+    stores its file list in the parquet entry-table sidecar — the manifest
+    JSON stays O(1) bytes (raw top-level consumers never parse the list;
+    at 1M files the inline encoding is ~100 MB re-parsed on every fold),
+    the sidecar is far smaller than inline JSON, and read_manifest folds
+    transparently."""
     tdir = str(tmp_path / "big")
     files = [
         f"v00001/part-{i:05d}-4f2a8c1e9b7d3a6f5c0e.snappy.parquet"
@@ -332,26 +329,6 @@ def test_checkpoint_file_list_spills_to_compressed_sidecar(tmp_path):
     folded = U.read_manifest(tdir, "v00001")
     assert folded["files"] == files
     assert U._ENTRIES_REF not in folded and U._FILES_COUNT not in folded
-    # r8 zlib compat: a hand-written legacy files_ref manifest still folds
-    fsio.mkdirs(fsio.join(tdir, "v00002"))
-    fsio.write_bytes(
-        fsio.join(tdir, "v00002", U._FILES_SIDECAR),
-        _zlib.compress("\n".join(files).encode(), 6),
-    )
-    fsio.write_bytes(
-        fsio.join(tdir, "v00002", U._MANIFEST),
-        json.dumps(
-            {
-                U._FILES_REF: f"v00002/{U._FILES_SIDECAR}",
-                U._FILES_COUNT: len(files),
-                "schema": None,
-                "kind": "upsert",
-                "parent": "v00001",
-            },
-            separators=(",", ":"),
-        ).encode(),
-    )
-    assert U.read_manifest(tdir, "v00002")["files"] == files
 
 
 def test_sidecar_checkpoints_end_to_end(spark, tmp_path, monkeypatch):

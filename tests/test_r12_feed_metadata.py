@@ -5,10 +5,9 @@ The optimization: ``_changes_since`` used to run one ``distinct().collect()``
 Spark job PER folded feed version just to validate the feed's ``_change``
 kind set — a fixed per-refresh job tax paid by every IVM/index consumer.
 Kinds are now writer-authored metadata: reference feeds fill the column
-from the ``_KIND`` sidecar (zero rows scanned), row feeds record their
-exact kind set in a ``_KINDS`` sidecar, and only a pre-sidecar (legacy)
-feed still derives kinds by scanning. These tests pin the metadata
-contract and the legacy fallback.
+from the ``_KIND`` sidecar (zero rows scanned) and row feeds record their
+exact kind set in a ``_KINDS`` sidecar. These tests pin the metadata
+contract.
 """
 
 import os
@@ -63,25 +62,6 @@ def test_upsert_preimage_feed_one_dir_one_schema(spark, tmp_path):
         (3, "c", "upsert"),
         (2, "b", "update_preimage"),
     }
-
-
-def test_changes_since_falls_back_to_row_scan_without_sidecar(
-    spark, tmp_path
-):
-    """A legacy feed (no _KINDS sidecar) still folds: kinds derive from
-    scanning the rows, and unknown kinds still refuse."""
-    tdir = str(tmp_path / "t")
-    U.write_table(_df(spark, [(1, "a")]), tdir)
-    U.upsert(
-        spark, tdir, _df(spark, [(1, "A")]), ["k"], feed_preimages=True
-    )
-    v = U.committed_versions(tdir)[-1]
-    fsio.delete_file(fsio.join(tdir, v, U._CHANGES, U._FEED_KINDS))
-    assert U.feed_kinds(tdir, v) is None
-    changes, newest = _changes_since(spark, tdir, "v00001")
-    assert newest == v
-    kinds = {r[0] for r in changes.select("_change").distinct().collect()}
-    assert kinds == {"upsert", "update_preimage"}
 
 
 def test_upsert_without_preimages_still_refuses_incremental_fold(

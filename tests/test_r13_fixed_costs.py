@@ -43,6 +43,16 @@ def test_parquet_schema_of_matches_inference(spark, tmp_path):
     assert {f.name: f.dataType for f in pinned} == {
         f.name: f.dataType for f in inferred.fields
     }
+    # mixed footer schemas (additive evolution across a file set): the
+    # inference read adopts ONE file's schema, so the helper must not pin
+    # a union — it bails and lets Spark decide
+    q = str(tmp_path / "wider")
+    df.withColumn("extra", F.lit(1)).write.parquet(q)
+    wider = [
+        os.path.join(q, n) for n in os.listdir(q) if n.endswith(".parquet")
+    ]
+    assert parquet_schema_of(wider) is not None
+    assert parquet_schema_of(files + wider) is None
 
 
 def test_parquet_schema_of_bails_on_timestamps(spark, tmp_path):
@@ -174,5 +184,6 @@ def test_upsert_partitioned_dv_carry_and_drop(spark):
     upsert_partitioned(spark, t2, ups2, ["k"], "p")
     raw2 = _read_manifest_raw(t2, _latest(t2))
     assert not raw2.get("dv"), "an all-upserted vector must not linger"
+    assert not os.path.exists(os.path.join(t2, _latest(t2), "_dv"))
     rows2 = {r["k"]: r["v"] for r in read_table(spark, t2).collect()}
     assert rows2[7] == 111 and len(rows2) == 30

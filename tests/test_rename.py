@@ -420,6 +420,3 @@ def test_rename_epoch_ordering_survives_width_transition():
     assert U.physical_name_for_entry(log, "v99999", "b") == "a"
     assert U.physical_name_for_entry(log, "v100000", "b") == "b"
     assert U.physical_name_for_entry(log, "", "b") == "a"  # abs entries
-    # the legacy collapsed-map sentinel outranks any real version
-    legacy = U.rename_log_of({"renames": {"a": "b"}})
-    assert U.physical_name_for_entry(legacy, "v100000", "b") == "a"
