@@ -23,6 +23,10 @@ def spark():
         )
         .appName("spookystuff-spark-tests")
         .config("spark.sql.shuffle.partitions", "8")
+        # locally created test frames (createDataFrame from a list) keep
+        # the 4 slices they had under local[4]: every slice costs one
+        # Python-worker pass each time the frame is evaluated
+        .config("spark.default.parallelism", "4")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")

@@ -16,12 +16,12 @@ from spookystuff_spark.sources.bloom_index import (
 )
 
 
-def _rows(spark, lo, hi):
+def _rows(spark, lo, hi, slices=None):
     # user_id deliberately NOT clustered: interleaved ranges per commit
-    return spark.createDataFrame(
-        [(i, i % 1000, f"u{i}") for i in range(lo, hi)],
-        "k long, user_id long, name string",
-    )
+    rows = [(i, i % 1000, f"u{i}") for i in range(lo, hi)]
+    if slices is not None:  # one slice = one partition, no coalesce pass
+        rows = spark.sparkContext.parallelize(rows, slices)
+    return spark.createDataFrame(rows, "k long, user_id long, name string")
 
 
 @pytest.fixture
@@ -301,12 +301,12 @@ def test_bloom_pruning_survives_vacuum_of_owner_versions(spark, tmp_path):
     data), or every later probe pays one failed read per file and never
     prunes again."""
     tdir = str(tmp_path / "vsurv")
-    U.write_table(_rows(spark, 0, 40).coalesce(1), tdir,
+    U.write_table(_rows(spark, 0, 40, slices=1), tdir,
                   bloom_cols=["name"], change_feed=False)
     for i in range(U.CHECKPOINT_EVERY + 3):
         U.append_rows(
             spark, tdir,
-            _rows(spark, 1000 * (i + 1), 1000 * (i + 1) + 20).coalesce(1),
+            _rows(spark, 1000 * (i + 1), 1000 * (i + 1) + 20, slices=1),
             bloom_cols=["name"], change_feed=False,
         )
     U.vacuum(tdir, keep=1)

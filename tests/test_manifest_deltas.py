@@ -32,6 +32,15 @@ def _mk(spark, rows):
     return spark.createDataFrame(rows, "k int, v string")
 
 
+def _one(spark, rows, schema="k int, v string"):
+    """One partition built from one slice: the single data file of
+    ``createDataFrame(rows).coalesce(1)`` without the per-slice Python
+    pass the coalesced task would run for every default slice."""
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1), schema
+    )
+
+
 def _manifest_bytes(tdir, v):
     return fsio.sizes([fsio.join(tdir, v, U._MANIFEST)])[0]
 
@@ -46,11 +55,11 @@ def test_append_manifest_bytes_are_o_batch_not_o_table(spark, tmp_path):
     instead of growing linearly with the table's file count. Checkpoints
     (every CHECKPOINT_EVERY commits) are the only O(files) manifests."""
     tdir = str(tmp_path / "tbl")
-    U.write_table(_mk(spark, [(0, "r0")]).coalesce(1), tdir)
+    U.write_table(_one(spark, [(0, "r0")]), tdir)
     sizes = {}
     for i in range(1, 51):
         v = U.append_rows(
-            spark, tdir, _mk(spark, [(i, f"r{i}")]).coalesce(1),
+            spark, tdir, _one(spark, [(i, f"r{i}")]),
             change_feed=False,
         )
         sizes[v] = _manifest_bytes(tdir, v)
@@ -87,13 +96,11 @@ def test_append_partitioned_manifest_bytes_o_batch(spark, tmp_path):
     append_partitioned are O(batch) not O(table), counted across 50
     appends — the append-heavy ANN/BM25 index maintenance path."""
     tdir = str(tmp_path / "ptbl")
-    df0 = spark.createDataFrame([(0, 0, "a")], "k int, b int, v string")
-    write_table_partitioned(df0.coalesce(1), tdir, "b")
+    df0 = _one(spark, [(0, 0, "a")], "k int, b int, v string")
+    write_table_partitioned(df0, tdir, "b")
     sizes = []
     for i in range(1, 51):
-        rows = spark.createDataFrame(
-            [(i, i % 4, f"r{i}")], "k int, b int, v string"
-        ).coalesce(1)
+        rows = _one(spark, [(i, i % 4, f"r{i}")], "k int, b int, v string")
         v = append_partitioned(
             spark, tdir, rows, "b", change_feed=False
         )
@@ -165,9 +172,9 @@ def test_vacuum_materializes_kept_deltas_over_dropped_bases(spark, tmp_path):
     must rewrite kept delta manifests as full checkpoints first. keep=1
     after a run of appends exercises exactly that."""
     tdir = str(tmp_path / "tbl")
-    U.write_table(_mk(spark, [(0, "r0")]).coalesce(1), tdir)
+    U.write_table(_one(spark, [(0, "r0")]), tdir)
     for i in range(1, 6):
-        U.append_rows(spark, tdir, _mk(spark, [(i, f"r{i}")]).coalesce(1))
+        U.append_rows(spark, tdir, _one(spark, [(i, f"r{i}")]))
     tip = U._latest(tdir)
     assert "files" not in U._read_manifest_raw(tdir, tip)  # delta before
     U.vacuum(tdir, keep=1)
@@ -185,9 +192,9 @@ def test_vacuum_keeps_intact_chains_as_deltas(spark, tmp_path):
     """A kept delta whose base is ALSO kept is left untouched — vacuum only
     materializes folds that would actually break."""
     tdir = str(tmp_path / "tbl")
-    U.write_table(_mk(spark, [(0, "r0")]).coalesce(1), tdir)
+    U.write_table(_one(spark, [(0, "r0")]), tdir)
     for i in range(1, 4):
-        U.append_rows(spark, tdir, _mk(spark, [(i, f"r{i}")]).coalesce(1))
+        U.append_rows(spark, tdir, _one(spark, [(i, f"r{i}")]))
     tip = U._latest(tdir)
     U.vacuum(tdir, keep=10)  # nothing committed is dropped
     assert "files" not in U._read_manifest_raw(tdir, tip)  # still a delta
@@ -230,11 +237,11 @@ def test_checkpoint_bounds_fold_depth(spark, tmp_path):
     """delta_depth never exceeds CHECKPOINT_EVERY; the commit after a
     full-depth chain is a checkpoint (depth resets to 0)."""
     tdir = str(tmp_path / "tbl")
-    U.write_table(_mk(spark, [(0, "r0")]).coalesce(1), tdir)
+    U.write_table(_one(spark, [(0, "r0")]), tdir)
     max_depth = 0
     for i in range(1, 2 * U.CHECKPOINT_EVERY + 3):
         U.append_rows(
-            spark, tdir, _mk(spark, [(i, f"r{i}")]).coalesce(1),
+            spark, tdir, _one(spark, [(i, f"r{i}")]),
             change_feed=False,
         )
         d = U.table_detail(tdir)["delta_depth"]
@@ -346,7 +353,7 @@ def test_sidecar_checkpoints_end_to_end(spark, tmp_path, monkeypatch):
     raw1 = U._read_manifest_raw(tdir, v1)
     assert U._ENTRIES_REF in raw1 and "files" not in raw1
     # delta append against the sidecar checkpoint folds transparently
-    U.append_rows(spark, tdir, _mk(spark, [(100, "x")]).coalesce(1))
+    U.append_rows(spark, tdir, _one(spark, [(100, "x")]))
     assert _state(spark, tdir) == {
         *((i, f"r{i}") for i in range(12)), (100, "x"),
     }
@@ -379,13 +386,13 @@ def test_checkpoint_consolidates_stats_and_blooms(spark, tmp_path, monkeypatch):
     the owners' manifests being vacuumed away (the data files are carried
     by reference; pre-consolidation their stats died with the metadata)."""
     tdir = str(tmp_path / "cons")
-    U.write_table(_mk(spark, [(0, "r0")]).coalesce(1), tdir,
+    U.write_table(_one(spark, [(0, "r0")]), tdir,
                   change_feed=False)
     U.attach_stats(tdir, ["k"])
     n_appends = U.CHECKPOINT_EVERY + 5
     for i in range(1, n_appends + 1):
         U.append_rows(
-            spark, tdir, _mk(spark, [(i, f"r{i}")]).coalesce(1),
+            spark, tdir, _one(spark, [(i, f"r{i}")]),
             change_feed=False,
         )
         U.attach_stats(tdir, ["k"])
